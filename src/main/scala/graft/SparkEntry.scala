@@ -24,7 +24,7 @@ object SparkEntry {
   // ------------------------------------------------------------------ queries
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // P1-P4: scan → synthesize transcripts → window order → mapPartitions parse
+    // P1-P4: scan → synthesize transcripts → window order → generator parse
     "kg_triples" -> ((s, dir) =>
       ParseStage.parsedTranscripts(s, dir)
         .filter(col("error").isNull)
@@ -46,7 +46,7 @@ object SparkEntry {
     // tokenization are mutually exact, not just self-consistent.
     "kg_nt_roundtrip" -> ((s, dir) => {
       val out = scratchDir("nt_rt_" + Integer.toHexString(dir.hashCode))
-      Materialize.ntriples(ParseStage.parsedTranscripts(s, dir).toDF(), out)
+      Materialize.ntriples(ParseStage.parsedTranscripts(s, dir), out)
       graft.sources.NTriples.read(s, out)
         .filter(col("error").isNull)
         .select("subj", "pred", "obj")
@@ -77,7 +77,7 @@ object SparkEntry {
     "kg_stream_ingest" -> ((s, dir) => {
       val root = scratchDir("st_in_" + Integer.toHexString(dir.hashCode)
         + "_" + streamRunSeq.incrementAndGet())
-      Materialize.ntriples(ParseStage.parsedTranscripts(s, dir).toDF(), s"$root/nt")
+      Materialize.ntriples(ParseStage.parsedTranscripts(s, dir), s"$root/nt")
       runAvailableNow(s, graft.sources.NTriples.stream(s, s"$root/nt", maxFilesPerTrigger = 8)
         .filter(col("error").isNull)
         .select("subj", "pred", "obj"), root)
@@ -205,7 +205,7 @@ object SparkEntry {
     // with the expected-triples oracle gates the whole encode/decode pair —
     // any fnv1a64 id collision would fan the join out and fail the gate.
     "q_dict_roundtrip" -> ((s, dir) => {
-      val parsed = ParseStage.parsedTranscripts(s, dir).toDF()
+      val parsed = ParseStage.parsedTranscripts(s, dir)
         .filter(col("error").isNull).select("subj", "pred", "obj")
       Materialize.decodeTriples(
         Materialize.encodeTriples(parsed), Materialize.termDictionary(parsed))
@@ -267,7 +267,7 @@ object SparkEntry {
     // ---------------- downstream graph analytics over the constructed KG
 
     "kg_degree_hist" -> ((s, dir) =>
-      graft.ops.GraphAnalytics.degreeHistogram(ParseStage.parsedTranscripts(s, dir).toDF())),
+      graft.ops.GraphAnalytics.degreeHistogram(ParseStage.parsedTranscripts(s, dir))),
 
     // The dictionary-encoded path's downstream consumer (r5 verdict #4):
     // the SAME degree histogram computed entirely over 8-byte BIGINT term
@@ -278,7 +278,7 @@ object SparkEntry {
     // is recorded in BASELINE.md), and any fnv1a64 subject collision
     // would merge two degree rows and fail the gate.
     "kg_degree_hist_enc" -> ((s, dir) => {
-      val parsed = ParseStage.parsedTranscripts(s, dir).toDF()
+      val parsed = ParseStage.parsedTranscripts(s, dir)
         .filter(col("error").isNull).select("subj", "pred", "obj")
       Materialize.encodeTriples(parsed)
         .groupBy("s_id").agg(count(lit(1)).as("degree"))
@@ -287,7 +287,7 @@ object SparkEntry {
 
     "kg_2hop" -> ((s, dir) =>
       graft.ops.GraphAnalytics.twoHopCounts(
-        graft.ops.GraphAnalytics.nodeEdges(ParseStage.parsedTranscripts(s, dir).toDF()))),
+        graft.ops.GraphAnalytics.nodeEdges(ParseStage.parsedTranscripts(s, dir)))),
 
     // triangles over the entity-similarity graph (jaccardEdges emits a < b)
     "kg_triangles" -> ((s, dir) =>
@@ -297,7 +297,7 @@ object SparkEntry {
     // fixed-point integer PageRank — exactly reproducible across engines
     // and partitionings, hence hash-gateable (see GraphAnalytics.pageRank)
     "kg_pagerank" -> ((s, dir) =>
-      graft.ops.GraphAnalytics.pageRank(ParseStage.parsedTranscripts(s, dir).toDF())),
+      graft.ops.GraphAnalytics.pageRank(ParseStage.parsedTranscripts(s, dir))),
 
     // multi-source BFS hop distances: seeds = the graph ROOTS (nodes with
     // no in-edge), which traverse the full KG depth — dist 0..3 all
@@ -309,7 +309,7 @@ object SparkEntry {
       // transcript parse (the thrice-consumed-frame lesson). Lazy: the
       // first consumer materializes it; no separate up-front job (r7).
       val edges = graft.ops.GraphAnalytics.nodeEdges(
-        ParseStage.parsedTranscripts(s, dir).toDF()).localCheckpoint(false)
+        ParseStage.parsedTranscripts(s, dir)).localCheckpoint(false)
       val seeds = edges.select(col("src").as("node")).distinct()
         .join(edges.select(col("dst").as("node")).distinct(), Seq("node"), "left_anti")
       graft.ops.GraphAnalytics.bfsDistances(edges, seeds, maxHops = 3)
@@ -353,7 +353,7 @@ object SparkEntry {
         .groupBy("shingle").agg(count(lit(1)).as("df"))
         .filter(col("df") > Linking.DefaultMaxShingleDf)
         .agg(count(lit(1)).as("n")).select(lit("shingle_df").as("cap"), col("n"))
-      val hotMids = graft.ops.GraphAnalytics.nodeEdges(ParseStage.parsedTranscripts(s, dir).toDF())
+      val hotMids = graft.ops.GraphAnalytics.nodeEdges(ParseStage.parsedTranscripts(s, dir))
         .groupBy("src").agg(count(lit(1)).as("outdeg"))
         .filter(col("outdeg") > graft.ops.GraphAnalytics.DefaultMaxMidOut)
         .agg(count(lit(1)).as("n")).select(lit("twohop_mid").as("cap"), col("n"))

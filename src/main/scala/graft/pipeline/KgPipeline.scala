@@ -47,7 +47,7 @@ object KgPipeline {
     // P1-P3: scan + parse (shuffle-free; each turn self-contained).
     val turns = Transcripts.transcripts(spark, sfDir)
     val (parsed, r1) = Materialize.snapshotStage(spark, "parse", s"$outDir/parse") {
-      ParseStage.parseTurns(turns.filter(col("turn_idx") % 2 === 0)).toDF()
+      ParseStage.parseTurns(turns.filter(col("turn_idx") % 2 === 0))
     }
     if (r1.reused) reused += 1
 

@@ -1,33 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.rdf._
-
-/** One parsed-triple output row. Terms are carried in canonical N-Triples
-  * text (`subj`/`pred`/`obj`) plus decomposed object fields for relational
-  * work; `error` is the per-document error channel (a bad document becomes
-  * one error row, never a task failure — reference semantics R28,
-  * `lib/ParseError.ts:7-12`). Blank nodes are relabeled
-  * `_:{conv_id}_{turn_idx}_{label}` (P4): per-document isomorphism is
-  * preserved while labels become globally unique, which is what lets
-  * downstream stages treat triples as plain strings.
-  */
-final case class TripleRow(
-    conv_id: String,
-    turn_idx: Int,
-    subj: String,
-    pred: String,
-    obj: String,
-    obj_type: String, // iri | bnode | literal | triple
-    lexical: String,
-    datatype: String,
-    lang: String,
-    error: String,
-)
-
-final case class TurnSlim(conv_id: String, turn_idx: Int, text: String)
+import graft.functions.RdfXmlTriples
+import graft.rdf.ParserOptions
 
 object ParseStage {
 
@@ -43,42 +21,24 @@ object ParseStage {
       .withColumn("dense", col("turn_rank") === col("turn_idx"))
   }
 
-  private[pipeline] def toRows(conv: String, turn: Int, parsed: Either[ParseError, Vector[Triple]]): Iterator[TripleRow] =
-    parsed match {
-      case Left(e) =>
-        Iterator(TripleRow(conv, turn, null, null, null, "error", null, null, null, e.message))
-      case Right(ts) =>
-        // P4: canonical bnode relabel `_:{conv}_{turn}_bN` (shared impl —
-        // see graft.rdf.Relabeler)
-        val relabel = new Relabeler(s"${conv}_${turn}_")
-        ts.iterator.map { t0 =>
-          val t = relabel(t0)
-          val (oty, lex, dt, lang) = t.obj match {
-            case Lit(l, d, la, _) => ("literal", l, d, la)
-            case Iri(_)           => ("iri", null, null, null)
-            case BNode(_)         => ("bnode", null, null, null)
-            case TripleTerm(_)    => ("triple", null, null, null)
-          }
-          TripleRow(conv, turn, t.subj.ntriples, t.pred.ntriples, t.obj.ntriples, oty, lex, dt, lang, null)
-        }
-    }
-
-  /** P3: the per-turn parse. Column pruning is done *manually* before the
-    * opaque typed map (Catalyst cannot prune across `mapPartitions` — the
-    * one rewrite that matters most at 10^12 rows, SURVEY §4.2), and there is
-    * deliberately NO shuffle here: each turn is a self-contained document,
-    * so parse scales embarrassingly with input splits. Conversation-level
-    * ordering (P2) is a separate operator for the consumers that need it.
+  /** P3 + P4: the per-turn parse, one [[graft.functions.RdfXmlTriples]]
+    * generator over `text` — output columns `conv_id, turn_idx` followed by
+    * [[graft.functions.RdfXmlTriples.Schema]]. Blank nodes are relabeled
+    * `_:{conv_id}_{turn_idx}_bN`: per-document isomorphism is preserved
+    * while labels become globally unique, which is what lets downstream
+    * stages treat triples as plain strings. A bad (or null) document becomes
+    * one error row, never a task failure (R28).
+    *
+    * There is deliberately NO shuffle here: each turn is a self-contained
+    * document, so parse scales embarrassingly with input splits, and
+    * Catalyst prunes the scan to the three columns the generator reads
+    * (SURVEY §4.2). Conversation-level ordering (P2) is a separate operator
+    * for the consumers that need it. Batch and streaming frames alike.
     */
-  def parseTurns(turns: DataFrame, opts: ParserOptions = ParserOptions()): Dataset[TripleRow] = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-    turns
-      .select(col("conv_id"), col("turn_idx"), col("text"))
-      .as[TurnSlim]
-      .mapPartitions { it =>
-        it.flatMap { t => toRows(t.conv_id, t.turn_idx, RdfXmlParser.parse(t.text, opts)) }
-      }
+  def parseTurns(turns: DataFrame, opts: ParserOptions = ParserOptions()): DataFrame = {
+    val prefix = concat(col("conv_id"), lit("_"), col("turn_idx"), lit("_"))
+    turns.select(col("conv_id"), col("turn_idx"),
+      column(RdfXmlTriples(expression(col("text")), expression(prefix), opts)))
   }
 
   /** Quad view: triples + the constant `graph` column from
@@ -93,7 +53,7 @@ object ParseStage {
   /** Parse only the RDF/XML turns of the synthesized transcripts (even
     * turn_idx carries the payloads; odd ones are prose for NER). The filter
     * sits on a base column, so it is pushed below everything else. */
-  def parsedTranscripts(spark: SparkSession, sfDir: String): Dataset[TripleRow] =
+  def parsedTranscripts(spark: SparkSession, sfDir: String): DataFrame =
     parseTurns(payloadTurns(spark, sfDir))
 
   /** [[parsedTranscripts]] through the quads surface — same payload-turn

@@ -57,8 +57,8 @@ private[rdf] object ParseMode {
 
 /** Per-XML-element state frame; direct analogue of `IActiveTag`
   * (`lib/RdfXmlParser.ts:992-1019`). One automaton instance exists per
-  * document — inside Spark this is a short-lived object per row in a
-  * `mapPartitions`, never a Spark datatype. */
+  * document — inside Spark this is a short-lived object per row of the
+  * parse generator, never a Spark datatype. */
 private[rdf] final class ActiveTag {
   var subject: Term = _ // Iri | BNode
   var predicate: Iri = _
@@ -677,8 +677,8 @@ object RdfXmlParser {
   val SupportedVersions: Set[String] = Set("1.2", "1.2-basic", "1.1")
 
   /** One-shot batch parse: the whole document text → all triples or the
-    * first error. This is the per-row entry point used inside Spark
-    * `mapPartitions`. */
+    * first error. This is the per-row entry point behind every Spark parse
+    * surface (`graft.functions.RdfXmlTriples`). */
   def parse(text: String, opts: ParserOptions = ParserOptions()): Either[ParseError, Vector[Triple]] = {
     val out = Vector.newBuilder[Triple]
     runToEither(new RdfXmlParser(opts, out += _), text)(out.result())

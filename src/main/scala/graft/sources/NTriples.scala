@@ -13,8 +13,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Scale shape: built on Spark's line-splittable text reader — a 100 TB dump
   * scans at full partition parallelism with no custom connector needed — and
-  * the per-line scanner runs inside `mapPartitions` exactly like the RDF/XML
-  * parse stage (manual column pruning is moot: text has one column).
+  * the per-line scanner runs inside `mapPartitions` (column pruning is moot:
+  * text has one column).
   * Malformed lines go to the `error` column instead of killing the task
   * (same error-channel contract as the rdfxml source, reference R28).
   *
@@ -31,7 +31,7 @@ object NTriples {
 
   /** Row: file lineage + term texts + decomposed object fields, or `error`
     * for an unparseable line (terms null, obj_type "error" — the same
-    * convention as [[graft.pipeline.TripleRow]]). `path` mirrors the rdfxml
+    * convention as [[graft.functions.RdfXmlTriples.Schema]]). `path` mirrors the rdfxml
     * source's lineage column (which dump a row came from — at corpus scale
     * the provenance column every downstream audit joins on). */
   final case class NtRow(path: String, subj: String, pred: String, obj: String,
@@ -182,7 +182,7 @@ object NTriples {
   }
 
   /** Decompose a scanned object term into (obj_type, lexical, datatype,
-    * lang) — the same fields [[graft.pipeline.TripleRow]] carries: `lexical`
+    * lang) — the same fields [[graft.functions.RdfXmlTriples.Schema]] carries: `lexical`
     * is the UNESCAPED literal value, `datatype` the bare datatype IRI,
     * `lang` the language tag WITHOUT the RDF 1.2 `--dir` suffix (direction
     * stays visible in the canonical `obj` text, exactly as in the rdfxml

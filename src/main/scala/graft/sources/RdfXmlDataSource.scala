@@ -16,7 +16,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.rdf.{BNode, Iri, Lit, ParseError, ParserOptions, RdfXmlParser, Relabeler, Term, Triple, TripleTerm}
+import graft.functions.RdfXmlTriples
+import graft.rdf.ParserOptions
 
 /** `spark.read.format("rdfxml")` — a DataSource V2 batch source that parses
   * RDF/XML files into triple rows, re-expressing the reference's primary
@@ -25,10 +26,11 @@ import graft.rdf.{BNode, Iri, Lit, ParseError, ParserOptions, RdfXmlParser, Rela
   *
   * Shape: one RDF/XML document per file; files are unsplittable (a document
   * is one parser state machine), so parallelism = file count, bin-packed
-  * into partitions by size. Schema mirrors [[graft.pipeline.TripleRow]] with
-  * `path` as the lineage column; a malformed document becomes one error row,
-  * never a task failure (R28). Column pruning is pushed into the reader
-  * (`SupportsPushDownRequiredColumns`).
+  * into partitions by size. Rows come from the same per-document function as
+  * the batch parse stage ([[graft.functions.RdfXmlTriples.rows]]): `path` as
+  * the lineage column, then its schema; a malformed document becomes one
+  * error row, never a task failure (R28). Column pruning is pushed into the
+  * reader (`SupportsPushDownRequiredColumns`).
   *
   * Options: `baseIRI` (applied per-file; `{path}` placeholder substitutes
   * the file URI), `validateUri`, `allowDuplicateRdfIds`.
@@ -44,17 +46,8 @@ class RdfXmlDataSource extends TableProvider with DataSourceRegister {
 }
 
 object RdfXmlTable {
-  val Schema: StructType = StructType(Seq(
-    StructField("path", StringType, nullable = false),
-    StructField("subj", StringType),
-    StructField("pred", StringType),
-    StructField("obj", StringType),
-    StructField("obj_type", StringType),
-    StructField("lexical", StringType),
-    StructField("datatype", StringType),
-    StructField("lang", StringType),
-    StructField("error", StringType),
-  ))
+  val Schema: StructType =
+    StructType(StructField("path", StringType, nullable = false) +: RdfXmlTriples.Schema.fields)
 }
 
 final class RdfXmlTable(options: CaseInsensitiveStringMap) extends Table with SupportsRead {
@@ -478,30 +471,9 @@ final class RdfXmlPartitionReader(
     finally in.close()
   }
 
-  private def utf8(s: String): UTF8String = if (s == null) null else UTF8String.fromString(s)
-
-  private def toRow(path: String, t: Triple, err: String): InternalRow = {
-    val (oty, lex, dt, lang) =
-      if (t == null) (if (err != null) "error" else null, null, null, null)
-      else t.obj match {
-        case Lit(l, d, la, _) => ("literal", l, d, la)
-        case Iri(_)           => ("iri", null, null, null)
-        case BNode(_)         => ("bnode", null, null, null)
-        case TripleTerm(_)    => ("triple", null, null, null)
-      }
-    val all: Map[String, String] = Map(
-      "path" -> path,
-      "subj" -> (if (t == null) null else t.subj.ntriples),
-      "pred" -> (if (t == null) null else t.pred.ntriples),
-      "obj" -> (if (t == null) null else t.obj.ntriples),
-      "obj_type" -> oty,
-      "lexical" -> lex,
-      "datatype" -> dt,
-      "lang" -> lang,
-      "error" -> err,
-    )
-    new GenericInternalRow(fieldNames.map(n => utf8(all(n)): Any))
-  }
+  /** Each requested column's ordinal in [[RdfXmlTriples.Schema]]; -1 =
+    * the `path` lineage column this reader adds. */
+  private val ordinals = fieldNames.map(n => if (n == "path") -1 else RdfXmlTriples.Schema.fieldIndex(n))
 
   private def parseNext(): Boolean = {
     while (!rows.hasNext && fileIdx < files.length) {
@@ -509,17 +481,14 @@ final class RdfXmlPartitionReader(
       fileIdx += 1
       val base = if (baseIRI.contains("{path}")) baseIRI.replace("{path}", path) else baseIRI
       val opts = ParserOptions(baseIRI = base, validateUri = validateUri, allowDuplicateRdfIds = allowDup)
-      rows = RdfXmlParser.parse(readFile(path), opts) match {
-        case Left(ParseError(msg)) => Iterator.single(toRow(path, null, msg))
-        case Right(ts) =>
-          // Globally-unique bnode relabel (shared graft.rdf.Relabeler), keyed
-          // by file: the FULL 128-bit path MD5 as prefix — a truncated prefix
-          // is not collision-safe (32 bits birthday-collides at ~65k files,
-          // silently merging unrelated blank nodes across documents).
-          val relabel = new Relabeler(
-            java.security.MessageDigest.getInstance("MD5")
-              .digest(path.getBytes("UTF-8")).map("%02x".format(_)).mkString + "_")
-          ts.iterator.map(t => toRow(path, relabel(t), null))
+      // Bnodes are keyed by file: the FULL 128-bit path MD5 as prefix — a
+      // truncated prefix is not collision-safe (32 bits birthday-collides at
+      // ~65k files, silently merging unrelated blank nodes across documents).
+      val prefix = java.security.MessageDigest.getInstance("MD5")
+        .digest(path.getBytes("UTF-8")).map("%02x".format(_)).mkString + "_"
+      val pathValue = UTF8String.fromString(path)
+      rows = RdfXmlTriples.rows(readFile(path), prefix, opts).map { r =>
+        new GenericInternalRow(ordinals.map[Any](i => if (i < 0) pathValue else r.getUTF8String(i)))
       }
     }
     rows.hasNext

@@ -1,55 +1,19 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.pipeline.{ParseStage, Materialize}
 
-/** Structured Streaming wrapper for the KG pipeline.
+/** Streaming surfaces of the KG pipeline.
   *
   * The reference's "streaming" is incremental per-document emission (SURVEY
   * §3 E1), not event-time processing — each transcript turn is
-  * self-contained, so the streaming job is stateless: `readStream` over a
-  * transcript directory → the same shuffle-free mapPartitions parse →
-  * append-mode sink. A `foreachBatch` variant runs the downstream
-  * (linking/canonicalization) stages per micro-batch when those are wanted
-  * incrementally; watermarking is provided for the one genuinely
-  * event-time-ish operator we expose (per-conversation turn counts over
-  * `ts`).
+  * self-contained, so a streamed parse is simply
+  * `ParseStage.parseTurns(spark.readStream…)`: the same shuffle-free
+  * generator as batch, into any append-mode sink. This object holds the
+  * one stateful operator on top of that: per-conversation progress.
   */
 final case class ConvProgress(conv_id: String, n_turns: Long, max_turn_idx: Int)
 
 object StreamingParse {
-
-  /** Parse a stream of transcript parquet files into a stream of triples. */
-  def parseStream(spark: SparkSession, inputDir: String): DataFrame = {
-    val turns = spark.readStream
-      .schema("conv_id STRING, turn_idx INT, role STRING, text STRING, tool STRING, ts TIMESTAMP")
-      .parquet(inputDir)
-    ParseStage.parseTurns(turns).toDF()
-  }
-
-  /** Append-mode parquet sink for the parsed triple stream. */
-  def run(spark: SparkSession, inputDir: String, outDir: String, checkpoint: String): StreamingQuery =
-    parseStream(spark, inputDir).writeStream
-      .format("parquet")
-      .option("path", s"$outDir/data")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** Windowed per-conversation turn counts with a watermark — the
-    * event-time aggregation surface (10-minute windows over `ts`, 30-minute
-    * late-data bound). */
-  def turnRates(spark: SparkSession, inputDir: String): DataFrame = {
-    val turns = spark.readStream
-      .schema("conv_id STRING, turn_idx INT, role STRING, text STRING, tool STRING, ts TIMESTAMP")
-      .parquet(inputDir)
-    turns
-      .withWatermark("ts", "30 minutes")
-      .groupBy(window(col("ts"), "10 minutes"), col("conv_id"))
-      .agg(count(lit(1)).as("n_turns"))
-  }
 
   /** Per-conversation progress tracked across micro-batches with
     * `mapGroupsWithState` — the custom-state surface
@@ -80,23 +44,5 @@ object StreamingParse {
           next
       }
       .toDF()
-  }
-
-  /** foreachBatch variant: run parse + materialization per micro-batch —
-    * the pattern for attaching the batch-only stages (linking, CC) to a
-    * stream without stateful operators. */
-  def runWithBatchStages(spark: SparkSession, inputDir: String, outDir: String, checkpoint: String): StreamingQuery = {
-    val turns = spark.readStream
-      .schema("conv_id STRING, turn_idx INT, role STRING, text STRING, tool STRING, ts TIMESTAMP")
-      .parquet(inputDir)
-    turns.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val parsed = ParseStage.parseTurns(batch).toDF()
-        parsed.write.mode("append").parquet(s"$outDir/batch_$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
   }
 }

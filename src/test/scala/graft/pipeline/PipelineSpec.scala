@@ -11,21 +11,22 @@ class PipelineSpec extends SparkSuite {
       ("c1", 0, """<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#"><rdf:Description rdf:about="http://e.org/s" rdf:nodeID="x"/></rdf:RDF>"""),
       ("c1", 1, """<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" xmlns:ex="http://e.org/"><rdf:Description rdf:about="http://e.org/s"><ex:p>v</ex:p></rdf:Description></rdf:RDF>"""),
       ("c1", 2, "<not-xml"),
+      ("c1", 3, null),
     ).toDF("conv_id", "turn_idx", "text")
     val rows = ParseStage.parseTurns(turns).collect()
-    val errors = rows.filter(_.error != null)
-    val ok = rows.filter(_.error == null)
-    assert(errors.length == 2)
-    assert(errors.map(_.turn_idx).toSet == Set(0, 2))
-    assert(errors.find(_.turn_idx == 0).get.error.startsWith("Only one of rdf:about"))
-    assert(ok.map(_.obj) sameElements Array("\"v\""))
+    val errors = rows.filter(_.getAs[String]("error") != null)
+    val ok = rows.filter(_.getAs[String]("error") == null)
+    assert(errors.length == 3)
+    assert(errors.map(_.getAs[Int]("turn_idx")).toSet == Set(0, 2, 3))
+    assert(errors.find(_.getAs[Int]("turn_idx") == 0).get.getAs[String]("error").startsWith("Only one of rdf:about"))
+    assert(ok.map(_.getAs[String]("obj")) sameElements Array("\"v\""))
   }
 
   test("blank node relabeling is canonical and globally unique") {
     import spark.implicits._
     val doc = """<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" xmlns:ex="http://e.org/"><rdf:Description><ex:p>v</ex:p></rdf:Description></rdf:RDF>"""
     val turns = Seq(("c1", 0, doc), ("c1", 2, doc), ("c2", 0, doc)).toDF("conv_id", "turn_idx", "text")
-    val subjects = ParseStage.parseTurns(turns).collect().map(_.subj).toSet
+    val subjects = ParseStage.parseTurns(turns).collect().map(_.getAs[String]("subj")).toSet
     assert(subjects == Set("_:c1_0_b0", "_:c1_2_b0", "_:c2_0_b0"))
   }
 

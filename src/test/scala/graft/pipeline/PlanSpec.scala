@@ -2,7 +2,11 @@ package graft.pipeline
 
 import graft.SparkEntry
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ColumnarToRowExec, DeserializeToObjectExec, ExplainMode,
+  FileSourceScanExec, GenerateExec, InputAdapter, ProjectExec, SerializeFromObjectExec, SparkPlan,
+  WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions.col
 
 /** Physical-plan hygiene: the properties that make these operators behave
@@ -10,7 +14,7 @@ import org.apache.spark.sql.functions.col
   * filter pushdown into the parquet scan, broadcast joins where a side is
   * small, partial aggregation, and a shuffle-free parse path.
   */
-class PlanSpec extends SparkSuite {
+class PlanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   private def plan(df: DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
@@ -29,20 +33,37 @@ class PlanSpec extends SparkSuite {
     assert(!p.contains("SortMergeJoin"), p)
   }
 
-  test("parse path is shuffle-free (no Exchange below the mapPartitions)") {
-    // parseTurns over a stored transcript table: scan → project → parse.
-    import spark.implicits._
-    val stored = Seq(("c1", 0, "<x/>")).toDF("conv_id", "turn_idx", "text")
-    val p = plan(ParseStage.parseTurns(stored).toDF())
-    assert(!p.contains("Exchange"), p)
-  }
+  /** Every physical node of `df`'s plan, AQE stages included (the
+    * pre-execution adaptive plan already carries the exchanges that
+    * `EnsureRequirements` inserts; `sparkPlan` does not). */
+  private def physicalNodes(df: DataFrame): Seq[SparkPlan] =
+    collect(df.queryExecution.executedPlan) { case n => n }
 
-  test("parse stage prunes columns before the opaque typed map") {
-    // Reading from a parquet table with extra columns: the scan must read
-    // only conv_id, turn_idx, text.
+  /** A stored transcript table, with columns the parse never reads. */
+  private lazy val storedTurns: String = {
     val dir = java.nio.file.Files.createTempDirectory("graft_prune").toString + "/t"
     Transcripts.transcripts(spark, sfDir).write.parquet(dir)
-    val p = plan(ParseStage.parseTurns(spark.read.parquet(dir)).toDF())
+    dir
+  }
+
+  test("parse path is one GenerateExec over scan/project: no shuffle, no serde") {
+    val nodes = physicalNodes(ParseStage.parseTurns(spark.read.parquet(storedTurns)))
+    val gens = nodes.collect { case g: GenerateExec => g }
+    assert(gens.length == 1, nodes.mkString("\n"))
+    val below = collect(gens.head.child) { case n => n }
+    assert(below.forall {
+      case _: ProjectExec | _: FileSourceScanExec | _: ColumnarToRowExec |
+           _: InputAdapter | _: WholeStageCodegenExec => true
+      case _ => false
+    }, below.mkString("\n"))
+    assert(nodes.collect { case e: ShuffleExchangeLike => e }.isEmpty, nodes.mkString("\n"))
+    assert(nodes.collect {
+      case n @ (_: DeserializeToObjectExec | _: SerializeFromObjectExec) => n
+    }.isEmpty, nodes.mkString("\n"))
+  }
+
+  test("parse stage scan reads only conv_id, turn_idx and text") {
+    val p = plan(ParseStage.parseTurns(spark.read.parquet(storedTurns)))
     val readSchema = p.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
     assert(readSchema.contains("conv_id") && readSchema.contains("text"), p)
     assert(!readSchema.contains("role") && !readSchema.contains("ts"), readSchema)
@@ -305,21 +326,20 @@ class PlanSpec extends SparkSuite {
     // SinglePartition collect of the ≤ nCells codebook rows, but no
     // hash-partitioned exchange may consume the embeddings scan.
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val pp = plan(graft.ops.Similarity.pqCodes(e, dim = 64))
-    assert(!pp.contains("+- Exchange") && !pp.contains(": Exchange"), pp) // broadcast-only
+    val pq = graft.ops.Similarity.pqCodes(e, dim = 64)
+    val pp = plan(pq)
+    // broadcast-only: BroadcastExchangeLike is not a ShuffleExchangeLike
+    assert(physicalNodes(pq).collect { case x: ShuffleExchangeLike => x }.isEmpty, pp)
     assert(pp.contains("argminsql2") || pp.contains("argmin_sql2"), pp)
     val en = graft.ops.Similarity.withNorms(e)
-    val pa = plan(graft.ops.Similarity.coarseAssign(
-      en, graft.ops.Similarity.coarseCodebook(en, 16)))
+    val assign = graft.ops.Similarity.coarseAssign(en, graft.ops.Similarity.coarseCodebook(en, 16))
+    val pa = plan(assign)
     // the corpus side: Scan parquet must reach the BroadcastNestedLoopJoin
     // (the 1-row codebook attach) without an Exchange above it
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
-    val sp = graft.ops.Similarity.coarseAssign(
-      en, graft.ops.Similarity.coarseCodebook(en, 16)).queryExecution.sparkPlan
-    val bnl = sp.collect { case j: BroadcastNestedLoopJoinExec => j }
+    val bnl = physicalNodes(assign).collect { case j: BroadcastNestedLoopJoinExec => j }
     assert(bnl.nonEmpty, pa)
-    assert(bnl.forall(j => j.left.collect { case x: ShuffleExchangeLike => x }.isEmpty), pa)
+    assert(bnl.forall(j => collect(j.left) { case x: ShuffleExchangeLike => x }.isEmpty), pa)
     assert(pa.contains("argmaxcos") || pa.contains("argmax_cos"), pa)
   }
 

@@ -45,6 +45,44 @@ class RdfXmlSourceSpec extends SparkSuite {
     assert(bn.length == 1 && bn.head.getAs[String]("subj").matches("_:[0-9a-f]{32}_b0"))
   }
 
+  /** One document per object kind: typed and language-tagged literals, a
+    * bnode object, and an RDF 1.2 triple term that itself holds a bnode. */
+  private val kindsDoc =
+    """<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" xmlns:ex="http://e.org/" rdf:version="1.2">
+      |<rdf:Description rdf:about="http://e.org/s">
+      |  <ex:n rdf:datatype="http://www.w3.org/2001/XMLSchema#integer">7</ex:n>
+      |  <ex:label xml:lang="en">hello</ex:label>
+      |  <ex:knows><rdf:Description><ex:name>anon</ex:name></rdf:Description></ex:knows>
+      |  <ex:claims rdf:parseType="Triple">
+      |    <rdf:Description rdf:nodeID="x"><ex:p rdf:resource="http://e.org/o"/></rdf:Description>
+      |  </ex:claims>
+      |</rdf:Description>
+      |</rdf:RDF>""".stripMargin
+
+  test("emitter parity: the rdfxml source and parseTurns decompose every object kind identically") {
+    val dir = Files.createTempDirectory("graft_rdfxml_kinds")
+    Files.writeString(dir.resolve("kinds.rdf"), kindsDoc)
+    val cols = Seq("subj", "pred", "obj", "obj_type", "lexical", "datatype", "lang", "error")
+    // rows with each document's bnode prefix stripped, in a stable order
+    def rowsOf(df: org.apache.spark.sql.DataFrame, bnodePrefix: String): Seq[Seq[String]] =
+      df.select(cols.map(col): _*).collect().toSeq
+        .map(r => cols.indices.map(i => Option(r.getString(i)).map(_.replaceAll(bnodePrefix, "_:")).orNull))
+        .sortBy(_.mkString("|"))
+    val source = rowsOf(
+      spark.read.format("rdfxml").option("baseIRI", "http://base.org/").load(dir.toString),
+      "_:[0-9a-f]{32}_")
+    import spark.implicits._
+    val stage = rowsOf(
+      graft.pipeline.ParseStage.parseTurns(Seq(("d", 0, kindsDoc)).toDF("conv_id", "turn_idx", "text"),
+        graft.rdf.ParserOptions(baseIRI = "http://base.org/")),
+      "_:d_0_")
+    assert(source.map(_(3)).toSet == Set("literal", "bnode", "triple"), source)
+    assert(source.exists(r => r(5) == "http://www.w3.org/2001/XMLSchema#integer" && r(4) == "7"), source)
+    assert(source.exists(r => r(6) == "en" && r(4) == "hello"), source)
+    assert(source.exists(r => r(3) == "triple" && r(2).startsWith("<<( _:b")), source)
+    assert(source == stage)
+  }
+
   test("rdfxml scan: runtime path filters prune FILES (DPP analogue), stats report listed bytes") {
     val dir = writeCorpus()
     import org.apache.spark.sql.util.CaseInsensitiveStringMap

@@ -6,6 +6,19 @@ import org.apache.spark.sql.functions._
 
 class StreamingSpec extends SparkSuite {
 
+  /** The streamed parse: `parseTurns` over a `readStream` of transcript
+    * parquet files into an append-mode parquet sink. */
+  private def runParseStream(input: String, out: String, checkpoint: String) =
+    graft.pipeline.ParseStage.parseTurns(spark.readStream
+        .schema("conv_id STRING, turn_idx INT, role STRING, text STRING, tool STRING, ts TIMESTAMP")
+        .parquet(input))
+      .writeStream
+      .format("parquet")
+      .option("path", s"$out/data")
+      .option("checkpointLocation", checkpoint)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+
   test("streaming parse: file-source micro-batches produce the batch result") {
     val tmp = Files.createTempDirectory("graft_stream").toString
     val input = s"$tmp/input"
@@ -17,7 +30,7 @@ class StreamingSpec extends SparkSuite {
       .filter(col("turn_idx") % 2 === 0)
       .write.parquet(input)
 
-    val q = StreamingParse.run(spark, input, out, ckpt)
+    val q = runParseStream(input, out, ckpt)
     q.awaitTermination(120000)
 
     val streamed = spark.read.parquet(s"$out/data")
@@ -206,10 +219,10 @@ class StreamingSpec extends SparkSuite {
       .filter(col("turn_idx") % 2 === 0).limit(50)
       .write.parquet(input)
 
-    StreamingParse.run(spark, input, out, ckpt).awaitTermination(120000)
+    runParseStream(input, out, ckpt).awaitTermination(120000)
     val n1 = spark.read.parquet(s"$out/data").count()
     // Restart with the same checkpoint: AvailableNow sees no new files.
-    StreamingParse.run(spark, input, out, ckpt).awaitTermination(120000)
+    runParseStream(input, out, ckpt).awaitTermination(120000)
     val n2 = spark.read.parquet(s"$out/data").count()
     assert(n1 == n2, "restart must be exactly-once, not re-emit")
   }
