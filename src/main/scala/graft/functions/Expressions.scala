@@ -605,7 +605,12 @@ private[functions] object NestedArrayKind {
   * [[ExprHelpers.argmaxCos]] for the exact tie/NaN order contract — it is
   * Spark's `max(struct(score, -index))`). The map-side IVF assignment
   * kernel: one call per row replaces a nCells-way explode + groupBy argmax,
-  * so the assignment never shuffles the embedding column (r7). */
+  * so the assignment never shuffles the embedding column (r7).
+  * Preconditions for agreeing with that aggregate: `embedding` and `n` are
+  * non-null (a null gives a NULL index where the aggregate gives cell 0),
+  * `n` and every `cnorms` entry are non-zero (under ANSI a zero divisor
+  * scores null here where `Divide` raises), and the caller's `vec_id` is
+  * unique (the aggregate collapses duplicates, a per-row kernel cannot). */
 case class ArgMaxCos(first: Expression, second: Expression,
                      third: Expression, fourth: Expression)
   extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression {
@@ -647,7 +652,11 @@ case class ArgMaxCos(first: Expression, second: Expression,
   * the minimal squared-L2 distance `sq_l2_f64(vsub, cents[j])` (see
   * [[ExprHelpers.argminSqL2]] — exactly Spark's `min(struct(dist, index))`).
   * The map-side PQ code-assignment kernel: replaces the k-way explode +
-  * groupBy argmin, so PQ encoding is a pure projection (r7). */
+  * groupBy argmin, so PQ encoding is a pure projection (r7).
+  * Preconditions for agreeing with that aggregate: `vsub` is non-null (a
+  * null gives a NULL index where the aggregate gives code 0) and the
+  * caller's `vec_id` is unique (the aggregate collapses duplicates, a
+  * per-row kernel cannot); there is no divisor, so no norm precondition. */
 case class ArgMinSqL2(left: Expression, right: Expression) extends BinaryExpression {
   import org.apache.spark.sql.types.IntegerType
   override def dataType: DataType = IntegerType

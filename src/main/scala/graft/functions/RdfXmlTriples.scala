@@ -11,7 +11,10 @@ import graft.rdf.{BNode, Iri, Lit, ParseError, ParserOptions, RdfXmlParser, Rela
 
 /** The RDF/XML parse kernel as a Catalyst generator: one document `text` in,
   * its triple rows out (see [[RdfXmlTriples.Schema]]), with blank nodes
-  * relabeled under the per-document `bnodePrefix` (P4). Emitting
+  * relabeled under the per-document `bnodePrefix` (P4) and relative IRIs
+  * resolved against the per-document `baseIRI` — an expression, so a file
+  * reader can derive it from the file path; it takes the place of
+  * `opts.baseIRI` (a null base parses without one). Emitting
   * `InternalRow`s directly keeps the parse visible to the optimizer: no
   * typed-object (de)serialization around it, and the input projection is
   * pruned by Catalyst rather than by hand.
@@ -21,29 +24,30 @@ import graft.rdf.{BNode, Iri, Lit, ParseError, ParserOptions, RdfXmlParser, Rela
   * Interpreted (`CodegenFallback`): the work per row is a whole document
   * parse, so generated glue code would buy nothing.
   */
-case class RdfXmlTriples(text: Expression, bnodePrefix: Expression, opts: ParserOptions)
+case class RdfXmlTriples(text: Expression, bnodePrefix: Expression, baseIRI: Expression,
+                         opts: ParserOptions)
     extends Generator with CodegenFallback {
-  override def children: Seq[Expression] = Seq(text, bnodePrefix)
+  override def children: Seq[Expression] = Seq(text, bnodePrefix, baseIRI)
   override def elementSchema: StructType = RdfXmlTriples.Schema
   override def prettyName: String = "rdfxml_triples"
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val t = InputCheck.string(text, prettyName)
-    if (t.isFailure) t else InputCheck.string(bnodePrefix, prettyName)
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    children.map(InputCheck.string(_, prettyName)).find(_.isFailure)
+      .getOrElse(TypeCheckResult.TypeCheckSuccess)
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val doc = text.eval(input)
     // a null lineage (e.g. null conv_id) relabels without a prefix rather
     // than failing the task
     val prefix = bnodePrefix.eval(input)
+    val base = baseIRI.eval(input)
     RdfXmlTriples.rows(
       if (doc == null) null else doc.toString,
       if (prefix == null) "" else prefix.toString,
-      opts)
+      opts.copy(baseIRI = if (base == null) "" else base.toString))
   }
 
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): RdfXmlTriples =
-    copy(text = c(0), bnodePrefix = c(1))
+    copy(text = c(0), bnodePrefix = c(1), baseIRI = c(2))
 }
 
 object RdfXmlTriples {
@@ -56,8 +60,9 @@ object RdfXmlTriples {
     Seq("subj", "pred", "obj", "obj_type", "lexical", "datatype", "lang", "error")
       .map(StructField(_, StringType)))
 
-  /** The single place a parsed document becomes rows (every parse surface —
-    * the batch stage, streaming, the `rdfxml` source — goes through here).
+  /** The single place a parsed document becomes rows; every parse surface
+    * (the batch stage, a streamed stage, [[graft.sources.RdfXmlFiles]])
+    * reaches it through the generator above.
     * Blank nodes are renumbered `{bnodePrefix}b0, b1, …` by
     * [[graft.rdf.Relabeler]], so labels stay isomorphic per document and
     * globally unique across documents. */

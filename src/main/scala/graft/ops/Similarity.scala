@@ -290,7 +290,13 @@ object Similarity {
     * exactly the aggregate form's `max(struct(s, -cell))` (see
     * [[graft.functions.ExprHelpers.argmaxCos]]);
     * [[coarseAssignByAgg]] is kept as the defining formulation and
-    * RestructureEquivalenceSpec pins row-equality of the two. */
+    * RestructureEquivalenceSpec pins row-equality of the two.
+    * Preconditions (the defining aggregate agrees only under them):
+    * `embedding` and its norm are non-null (a null gets a NULL cell
+    * where the aggregate gives cell 0), every norm is non-zero (under ANSI
+    * the kernel scores a zero divisor null where `Divide` raises), and
+    * `vec_id` is unique (the aggregate collapses duplicates, the kernel
+    * does not). */
   private[graft] def coarseAssign(e: DataFrame, codebook: DataFrame): DataFrame =
     e.crossJoin(broadcast(codebookRow(codebook)))
       .select(col("vec_id"), col("embedding"), col("n"),
@@ -383,25 +389,6 @@ object Similarity {
       .dropDuplicates("a", "b")
   }
 
-  /** Product-quantization codes — the vector-compression primitive under
-    * disk-resident ANN at corpus scale (a 64-dim float vector becomes `m`
-    * small ints; IVF-PQ is this composed with [[ivfTopK]]'s cell
-    * assignment). The embedding is split into `m` contiguous subspaces;
-    * each subvector is assigned the index of its nearest (squared-L2)
-    * centroid in that subspace's codebook. Codebook = the subvectors of
-    * the `k` lowest vec_ids (data-independent deterministic choice, same
-    * convention as [[ivfTopK]]'s codebook; [[lloydRefinePq]] trains it in
-    * place when `trainIters > 0`).
-    *
-    * Output is EXPLODED (vec_id, subspace, code) integer rows so the
-    * driver hash never sees a float. Scale shape: the codebook collapses
-    * to m broadcast rows of parallel arrays; the vector side is a narrow
-    * m-way explode; the code is one native `argmin_sql2` projection per
-    * (vec_id, subspace) row — the operator has NO exchange at all (r7;
-    * previously a k-way candidate explode + groupBy argmin whose exchange
-    * carried n·m rows). Distances are the same left-to-right double fold
-    * as [[dot]], so the DuckDB oracle replays the argmin bit-exactly; ties
-    * break to the smallest centroid index via lexicographic struct min. */
   /** The m contiguous subvector slices of an embedding column. */
   private def subSlices(c: Column, m: Int, sub: Int): Column =
     array((0 until m).map(s => slice(c, s * sub + 1, sub)): _*)
@@ -432,7 +419,13 @@ object Similarity {
     * codebook rows — r7, no corpus exchange; the mean groups by
     * (subspace, j, pos)). Same order-free fixed-point mean, same
     * keep-previous-on-empty rule, same per-iteration localCheckpoint of
-    * the bounded m·k-row codebook. */
+    * the bounded m·k-row codebook.
+    * Preconditions (the defining aggregate agrees only under them):
+    * `embedding` is non-null (a null gets a NULL code where the aggregate
+    * gives code 0) and `vec_id` is unique (the aggregate collapses
+    * duplicates, the kernel does not). The non-zero-norm precondition of
+    * [[coarseAssign]] does not arise: the squared-L2 kernel divides by
+    * nothing. */
   private[graft] def lloydRefinePq(vsubs: DataFrame, init: DataFrame, iters: Int): DataFrame = {
     var cb = init.select(col("j"), col("subspace"),
       transform(col("csub"), x => x.cast("double")).as("csub"))
@@ -459,6 +452,31 @@ object Similarity {
     cb
   }
 
+  /** Product-quantization codes — the vector-compression primitive under
+    * disk-resident ANN at corpus scale (a 64-dim float vector becomes `m`
+    * small ints; IVF-PQ is this composed with [[ivfTopK]]'s cell
+    * assignment). The embedding is split into `m` contiguous subspaces;
+    * each subvector is assigned the index of its nearest (squared-L2)
+    * centroid in that subspace's codebook. Codebook = the subvectors of
+    * the `k` lowest vec_ids (data-independent deterministic choice, same
+    * convention as [[ivfTopK]]'s codebook; [[lloydRefinePq]] trains it in
+    * place when `trainIters > 0`).
+    *
+    * Output is EXPLODED (vec_id, subspace, code) integer rows so the
+    * driver hash never sees a float. Scale shape: the codebook collapses
+    * to m broadcast rows of parallel arrays; the vector side is a narrow
+    * m-way explode; the code is one native `argmin_sql2` projection per
+    * (vec_id, subspace) row — the operator has NO exchange at all (r7;
+    * previously a k-way candidate explode + groupBy argmin whose exchange
+    * carried n·m rows). Distances are the same left-to-right double fold
+    * as [[dot]], so the DuckDB oracle replays the argmin bit-exactly; ties
+    * break to the smallest centroid index via lexicographic struct min.
+    * Preconditions (the defining aggregate agrees only under them):
+    * `embedding` is non-null (a null gets a NULL code where the aggregate
+    * gives code 0) and `vec_id` is unique (the aggregate collapses
+    * duplicates, the kernel does not). The non-zero-norm precondition of
+    * [[coarseAssign]] does not arise: the squared-L2 kernel divides by
+    * nothing. */
   def pqCodes(embeddings: DataFrame, m: Int = 4, k: Int = 16, dim: Int = 0,
               trainIters: Int = 0): DataFrame = {
     val d = embeddingDim(embeddings, dim)

@@ -39,11 +39,12 @@ object Materialize {
       df.write.mode("overwrite").parquet(s"$dir/data")
       val back = spark.read.parquet(s"$dir/data")
       val partCounts = back.groupBy(spark_partition_id().as("pid")).count()
-        .collect().map(r => s"""{"pid":${r.getInt(0)},"rows":${r.getLong(1)}}""")
-      val rows = partCounts.map(_.split("\"rows\":")(1).dropRight(1).toLong).sum
+        .collect().map(r => (r.getInt(0), r.getLong(1)))
+      val rows = partCounts.map(_._2).sum
+      val partitions = partCounts.map { case (pid, n) => s"""{"pid":$pid,"rows":$n}""" }
       Files.createDirectories(manifestPath(dir).getParent)
       Files.writeString(manifestPath(dir),
-        s"""{"stage":"$name","rows":$rows,"partitions":[${partCounts.mkString(",")}]}""")
+        s"""{"stage":"$name","rows":$rows,"partitions":[${partitions.mkString(",")}]}""")
       (back, StageResult(dir, rows, reused = false))
     }
   }

@@ -38,7 +38,8 @@ object ParseStage {
   def parseTurns(turns: DataFrame, opts: ParserOptions = ParserOptions()): DataFrame = {
     val prefix = concat(col("conv_id"), lit("_"), col("turn_idx"), lit("_"))
     turns.select(col("conv_id"), col("turn_idx"),
-      column(RdfXmlTriples(expression(col("text")), expression(prefix), opts)))
+      column(RdfXmlTriples(expression(col("text")), expression(prefix),
+        expression(lit(opts.baseIRI)), opts)))
   }
 
   /** Quad view: triples + the constant `graph` column from

@@ -77,7 +77,7 @@ final case class Triple(subj: Term, pred: Term, obj: Term) {
 }
 
 /** Canonical blank-node relabeling shared by every parse surface (pipeline
-  * stage P4 and the DSv2 source): bnodes are renumbered `b0, b1, …` in order
+  * stage P4 and the RDF/XML file reader): bnodes are renumbered `b0, b1, …` in order
   * of first appearance in the emitted stream — deterministic for a
   * deterministic document and independent of internal counter details — then
   * prefixed with the caller's document lineage (`{conv}_{turn}_` /

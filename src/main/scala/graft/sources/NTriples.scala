@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `.nquads` (and of any standard N-Triples dump): lines → rows carrying the
   * same canonical term TEXT the rest of the pipeline uses in its `subj` /
   * `pred` / `obj` columns, PLUS the decomposed object fields
-  * (`obj_type`/`lexical`/`datatype`/`lang`) the rdfxml source and the parse
+  * (`obj_type`/`lexical`/`datatype`/`lang`) [[RdfXmlFiles]] and the parse
   * stage emit — so a dump read through this source drops into every
   * downstream relational operator without re-tokenizing terms. A sink →
   * source round trip is the identity on the term columns.
@@ -16,23 +16,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the per-line scanner runs inside `mapPartitions` (column pruning is moot:
   * text has one column).
   * Malformed lines go to the `error` column instead of killing the task
-  * (same error-channel contract as the rdfxml source, reference R28).
+  * (same error-channel contract as [[RdfXmlFiles]], reference R28).
   *
-  * Streaming ([[stream]]/[[streamQuads]]) deliberately reuses Spark's
-  * built-in text FileStreamSource rather than the rdfxml source's custom
-  * whole-file MicroBatchStream: RDF/XML documents are unsplittable (one
-  * parser state machine per file), so that source had to own its file-log —
-  * but N-Triples lines are independent, and the built-in source gives the
-  * same durable file-log / exactly-once / maxFilesPerTrigger semantics while
-  * KEEPING within-file split parallelism, which a whole-file stream would
-  * forfeit on a dump of a few huge files.
+  * Streaming ([[stream]]/[[streamQuads]]) reuses Spark's built-in text
+  * FileStreamSource (durable file log, exactly-once, maxFilesPerTrigger), as
+  * [[RdfXmlFiles.stream]] does. The difference is the split: an RDF/XML
+  * document is one parser state machine, so that reader takes each file
+  * whole (`wholetext`); N-Triples lines are independent, so this one KEEPS
+  * within-file split parallelism, which a whole-file read would forfeit on
+  * a dump of a few huge files.
   */
 object NTriples {
 
   /** Row: file lineage + term texts + decomposed object fields, or `error`
     * for an unparseable line (terms null, obj_type "error" — the same
-    * convention as [[graft.functions.RdfXmlTriples.Schema]]). `path` mirrors the rdfxml
-    * source's lineage column (which dump a row came from — at corpus scale
+    * convention as [[graft.functions.RdfXmlTriples.Schema]]). `path` mirrors
+    * [[RdfXmlFiles]]' lineage column (which dump a row came from — at corpus scale
     * the provenance column every downstream audit joins on). */
   final case class NtRow(path: String, subj: String, pred: String, obj: String,
       obj_type: String, lexical: String, datatype: String, lang: String,
@@ -185,8 +184,8 @@ object NTriples {
     * lang) — the same fields [[graft.functions.RdfXmlTriples.Schema]] carries: `lexical`
     * is the UNESCAPED literal value, `datatype` the bare datatype IRI,
     * `lang` the language tag WITHOUT the RDF 1.2 `--dir` suffix (direction
-    * stays visible in the canonical `obj` text, exactly as in the rdfxml
-    * source's rows). The term text was already boundary-validated by the
+    * stays visible in the canonical `obj` text, exactly as in
+    * [[RdfXmlFiles]]' rows). The term text was already boundary-validated by the
     * caller's scan. */
   private[sources] def decomposeObject(obj: String): Either[String, (String, String, String, String)] =
     if (obj.startsWith("<<(")) Right(("triple", null, null, null))

@@ -14,13 +14,6 @@ object GraftSqlBridge {
   def registerTemp(spark: SparkSession, name: String, builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
 
-  /** The session's Hadoop configuration with per-scan options merged — what
-    * a DSv2 source must ship to its readers instead of `new Configuration()`
-    * (which would drop `spark.hadoop.*` props, object-store credentials, and
-    * HDFS HA nameservices). `sessionState` is `private[sql]` in Spark 4. */
-  def hadoopConfWithOptions(spark: SparkSession, options: Map[String, String]): org.apache.hadoop.conf.Configuration =
-    spark.sessionState.newHadoopConfWithOptions(options)
-
   /** Apply an extensions object's injected functions to a registry clone —
     * lets tests exercise the `SparkSessionExtensions` path without booting a
     * second SparkContext (`registerFunctions` is `private[sql]`). */

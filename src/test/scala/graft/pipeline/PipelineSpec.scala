@@ -64,7 +64,17 @@ class PipelineSpec extends SparkSuite {
     val (df2, r2) = Materialize.snapshotStage(spark, "s", dir)(compute)
     assert(r2.reused && computes == 1)
     assert(df2.collect().map(_.getInt(0)).sorted sameElements Array(1, 2))
-    assert(Files.readString(java.nio.file.Paths.get(dir, "_meta", "manifest.json")).contains("\"rows\":2"))
+    val manifest = Files.readString(java.nio.file.Paths.get(dir, "_meta", "manifest.json"))
+    assert(manifest.contains("\"rows\":2"))
+    // an interrupted write: data/ landed but _meta/manifest.json did not —
+    // the rerun recomputes and ends exactly where an uninterrupted run does
+    val torn = Files.createTempDirectory("graft_snap_torn").toString
+    Seq((9, "partial")).toDF("id", "v").write.parquet(s"$torn/data")
+    val (df3, r3) = Materialize.snapshotStage(spark, "s", torn)(compute)
+    assert(!r3.reused && r3.rows == 2 && computes == 2)
+    def sorted(df: org.apache.spark.sql.DataFrame) = df.as[(Int, String)].collect().sorted.toSeq
+    assert(sorted(df3) == sorted(df1))
+    assert(Files.readString(java.nio.file.Paths.get(torn, "_meta", "manifest.json")) == manifest)
   }
 
   test("KgPipeline end-to-end + resume") {

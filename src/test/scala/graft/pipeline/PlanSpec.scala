@@ -173,8 +173,8 @@ class PlanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   }
 
   test("rdfxml DSv2 scan reports file-size statistics: small RDF/XML side auto-broadcasts") {
-    // Without SupportsReportStatistics a DSv2 relation sizes as
-    // spark.sql.defaultSizeInBytes (infinite) and would ALWAYS sort-merge.
+    // The relation must size as its files: at spark.sql.defaultSizeInBytes
+    // (infinite) it would ALWAYS sort-merge.
     val dir = java.nio.file.Files.createTempDirectory("graft_stats").toString
     for (i <- 1 to 3) {
       val xml = s"""<?xml version="1.0"?>
@@ -183,7 +183,7 @@ class PlanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
         |</rdf:RDF>""".stripMargin
       java.nio.file.Files.write(java.nio.file.Paths.get(dir, s"d$i.rdf"), xml.getBytes("UTF-8"))
     }
-    val small = spark.read.format("rdfxml").load(dir).select("subj", "obj")
+    val small = graft.sources.RdfXmlFiles.read(spark, dir).select("subj", "obj")
     val big = spark.range(100000).selectExpr("concat('<http://example.org/d', id, '>') as subj", "id")
     // Threshold BELOW big's own size estimate (~MBs for 100k string rows):
     // if the rdfxml relation regressed to defaultSizeInBytes (infinite),

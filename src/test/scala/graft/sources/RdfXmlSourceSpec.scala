@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import graft.pipeline.SparkSuite
+import graft.rdf.ParserOptions
 
 class RdfXmlSourceSpec extends SparkSuite {
 
@@ -27,9 +28,7 @@ class RdfXmlSourceSpec extends SparkSuite {
 
   test("rdfxml DSv2 source: triples, error rows, bnode uniqueness, path lineage") {
     val dir = writeCorpus()
-    val df = spark.read.format("rdfxml")
-      .option("baseIRI", "http://base.org/")
-      .load(dir)
+    val df = RdfXmlFiles.read(spark, dir, ParserOptions(baseIRI = "http://base.org/"))
     val rows = df.collect()
     // a.rdf: 2 triples; b.rdf: 1 (bnode subj); bad.rdf: 1 error row; rel.rdf: 1.
     assert(rows.length == 5)
@@ -69,7 +68,7 @@ class RdfXmlSourceSpec extends SparkSuite {
         .map(r => cols.indices.map(i => Option(r.getString(i)).map(_.replaceAll(bnodePrefix, "_:")).orNull))
         .sortBy(_.mkString("|"))
     val source = rowsOf(
-      spark.read.format("rdfxml").option("baseIRI", "http://base.org/").load(dir.toString),
+      RdfXmlFiles.read(spark, dir.toString, ParserOptions(baseIRI = "http://base.org/")),
       "_:[0-9a-f]{32}_")
     import spark.implicits._
     val stage = rowsOf(
@@ -83,33 +82,9 @@ class RdfXmlSourceSpec extends SparkSuite {
     assert(source == stage)
   }
 
-  test("rdfxml scan: runtime path filters prune FILES (DPP analogue), stats report listed bytes") {
-    val dir = writeCorpus()
-    import org.apache.spark.sql.util.CaseInsensitiveStringMap
-    val opts = new CaseInsensitiveStringMap(java.util.Map.of("path", dir))
-    val scan = new RdfXmlScan(opts, RdfXmlTable.Schema)
-    // stats: sum of the four files' sizes (auto-broadcast depends on this)
-    val stats = scan.estimateStatistics()
-    val expectedBytes = new java.io.File(dir).listFiles().map(_.length()).sum
-    assert(stats.sizeInBytes.getAsLong == expectedBytes)
-    assert(!stats.numRows.isPresent)
-    // runtime filtering contract: filter() after planning re-plans to only
-    // the matching files — the join-derived file-pruning path
-    assert(scan.planInputPartitions().map(_.asInstanceOf[RdfXmlInputPartition].files.length).sum == 4)
-    val aPath = "file:" + dir + "/a.rdf"
-    scan.filter(Array[org.apache.spark.sql.sources.Filter](
-      org.apache.spark.sql.sources.In("path", Array(aPath))))
-    val pruned = scan.planInputPartitions().flatMap(_.asInstanceOf[RdfXmlInputPartition].files)
-    assert(pruned.toSeq == Seq(aPath), pruned.mkString(","))
-    // non-path runtime filters are ignored (conservative contract)
-    scan.filter(Array[org.apache.spark.sql.sources.Filter](
-      org.apache.spark.sql.sources.EqualTo("subj", "x")))
-    assert(scan.planInputPartitions().map(_.asInstanceOf[RdfXmlInputPartition].files.length).sum == 4)
-  }
-
   test("rdfxml scan joined against a path list still returns exact results (runtime filter is semantics-free)") {
     val dir = writeCorpus()
-    val df = spark.read.format("rdfxml").load(dir)
+    val df = RdfXmlFiles.read(spark, dir)
     import spark.implicits._
     val want = Seq("file:" + dir + "/a.rdf").toDF("path")
     val joined = df.join(broadcast(want), "path").select("subj", "pred", "obj").collect()
@@ -127,7 +102,7 @@ class RdfXmlSourceSpec extends SparkSuite {
     val staging = dir.resolve("_temporary").resolve("0")
     java.nio.file.Files.createDirectories(staging)
     java.nio.file.Files.write(staging.resolve("part-00000.rdf"), doc("uncommitted").getBytes("UTF-8"))
-    val rows = spark.read.format("rdfxml").load(dir.toString).collect()
+    val rows = RdfXmlFiles.read(spark, dir.toString).collect()
     assert(rows.map(_.getAs[String]("subj")).toSet == Set("<http://e.org/good>"))
   }
 
@@ -140,7 +115,7 @@ class RdfXmlSourceSpec extends SparkSuite {
     val out = new java.util.zip.GZIPOutputStream(
       java.nio.file.Files.newOutputStream(dir.resolve("c.rdf.gz")))
     out.write(doc.getBytes(java.nio.charset.StandardCharsets.UTF_8)); out.close()
-    val rows = spark.read.format("rdfxml").load(dir.toString).collect()
+    val rows = RdfXmlFiles.read(spark, dir.toString).collect()
     assert(rows.length == 1)
     assert(rows.head.getAs[String]("subj") == "<http://e.org/gz>")
     assert(rows.head.getAs[String]("lexical") == "zipped")
@@ -148,69 +123,60 @@ class RdfXmlSourceSpec extends SparkSuite {
 
   test("rdfxml source prunes columns down to the reader") {
     val dir = writeCorpus()
-    val df = spark.read.format("rdfxml").option("baseIRI", "http://base.org/")
-      .load(dir).select("pred")
+    val df = RdfXmlFiles.read(spark, dir, ParserOptions(baseIRI = "http://base.org/")).select("pred")
     val scan = df.queryExecution.executedPlan.collectLeaves().head.toString
     assert(df.collect().length == 5)
-    // physical scan reads only the requested column
-    assert(scan.contains("pred") && !scan.contains("lexical"), scan)
+    // the physical scan reads only the document text
+    assert(scan.contains("ReadSchema: struct<value:string>"), scan)
   }
 
   test("rdfxml source respects {path} baseIRI placeholder and SQL usage") {
     val dir = writeCorpus()
-    val df = spark.read.format("rdfxml")
-      .option("baseIRI", "{path}")
-      .load(dir)
+    val df = RdfXmlFiles.read(spark, dir, ParserOptions(baseIRI = "{path}"))
       .filter(col("error").isNull)
     // rel.rdf's relative subject resolves against its own file URI
     val rel = df.filter(col("path").endsWith("rel.rdf")).select("subj").collect().map(_.getString(0))
     assert(rel.forall(s => s.contains("rel.rdf") || s.contains("frag")), rel.mkString(","))
   }
 
+  /** `body` under the session's file-split settings: files pack into
+    * partitions of at most `bytes` (no open cost, no minimum partition
+    * count), so 1 byte puts each file in its own partition. */
+  private def withMaxPartitionBytes[A](bytes: Long)(body: => A): A = {
+    val conf = Map("spark.sql.files.maxPartitionBytes" -> bytes.toString,
+      "spark.sql.files.openCostInBytes" -> "0", "spark.sql.files.minPartitionNum" -> "1")
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally conf.keys.foreach(spark.conf.unset)
+  }
+
   test("rdfxml source counts scale by file, independent of partition packing") {
     val dir = writeCorpus()
-    val one = spark.read.format("rdfxml").option("baseIRI", "http://b.org/")
-      .option("targetPartitionBytes", 1L).load(dir) // one file per partition
-    val packed = spark.read.format("rdfxml").option("baseIRI", "http://b.org/")
-      .option("targetPartitionBytes", 1L << 30).load(dir) // all files one partition
-    assert(one.count() == packed.count())
-    assert(one.rdd.getNumPartitions == 4)
-    assert(packed.rdd.getNumPartitions == 1)
+    def countAndPartitions() = {
+      val df = RdfXmlFiles.read(spark, dir, ParserOptions(baseIRI = "http://b.org/"))
+      (df.count(), df.rdd.getNumPartitions)
+    }
+    val (one, oneParts) = withMaxPartitionBytes(1L)(countAndPartitions()) // one file per partition
+    val (packed, packedParts) = withMaxPartitionBytes(1L << 30)(countAndPartitions()) // all files one partition
+    assert(one == packed)
+    assert(oneParts == 4)
+    assert(packedParts == 1)
   }
 
   test("path filters push down to file pruning: only matching files are planned") {
     val dir = writeCorpus()
-    def read() = spark.read.format("rdfxml")
-      .option("baseIRI", "http://base.org/")
-      .option("targetPartitionBytes", "1") // one file per partition → partition count = file count
-      .load(dir)
-    assert(read().rdd.getNumPartitions == 4)
-    val filtered = read().filter(col("path").endsWith("a.rdf"))
-    // pruned at planning: one input partition, not four parsed-then-filtered
-    assert(filtered.rdd.getNumPartitions == 1)
-    val rows = filtered.collect()
-    assert(rows.length == 2 && rows.forall(_.getAs[String]("path").endsWith("a.rdf")))
-    // the scan advertises the pushed filter
-    val leaf = filtered.queryExecution.executedPlan.collectLeaves().head.toString
-    assert(leaf.contains("pushedPathFilters=[StringEndsWith(path,a.rdf)]"), leaf)
-    // non-path filters are untouched (and still correct)
-    val nonPath = read().filter(col("obj_type") === "literal").collect()
-    assert(nonPath.nonEmpty && nonPath.forall(_.getAs[String]("obj_type") == "literal"))
-  }
-
-  test("rdfxml scan ships the session Hadoop configuration, overlaid with scan options") {
-    val dir = writeCorpus()
-    spark.sparkContext.hadoopConfiguration.set("graft.probe.ctx", "from-context")
-    try {
-      val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-        java.util.Map.of("path", dir, "graft.probe.opt", "from-option"))
-      val scan = new RdfXmlScan(opts, RdfXmlTable.Schema)
-      // a bare `new Configuration()` would carry neither of these
-      assert(scan.hadoopConf.value.get("graft.probe.ctx") == "from-context")
-      assert(scan.hadoopConf.value.get("graft.probe.opt") == "from-option")
-      // and the conf actually reaches file listing / the readers
-      assert(spark.read.format("rdfxml").option("baseIRI", "http://base.org/")
-        .load(dir).count() == 5)
-    } finally spark.sparkContext.hadoopConfiguration.unset("graft.probe.ctx")
+    def read() = RdfXmlFiles.read(spark, dir, ParserOptions(baseIRI = "http://base.org/"))
+    // one file per partition → partition count = file count
+    withMaxPartitionBytes(1L) {
+      assert(read().rdd.getNumPartitions == 4)
+      val filtered = read().filter(col("path").endsWith("a.rdf"))
+      // pruned at planning: one input partition, not four parsed-then-filtered
+      assert(filtered.rdd.getNumPartitions == 1)
+      val rows = filtered.collect()
+      assert(rows.length == 2 && rows.forall(_.getAs[String]("path").endsWith("a.rdf")))
+      // non-path filters are untouched (and still correct)
+      val nonPath = read().filter(col("obj_type") === "literal").collect()
+      assert(nonPath.nonEmpty && nonPath.forall(_.getAs[String]("obj_type") == "literal"))
+    }
   }
 }

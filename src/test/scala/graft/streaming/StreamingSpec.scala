@@ -97,7 +97,7 @@ class StreamingSpec extends SparkSuite {
     def runOnce(): Unit = {
       // parquet sink: the one sink kind that supports checkpoint RESUME
       // (memory sinks refuse recovery), which is exactly what this pins
-      val q = spark.readStream.format("rdfxml").load(input)
+      val q = graft.sources.RdfXmlFiles.stream(spark, input)
         .writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
@@ -110,17 +110,24 @@ class StreamingSpec extends SparkSuite {
     runOnce()
     assert(spark.read.parquet(out).count() == 2, "first micro-batch parses the first document")
 
-    // second file arrives; restart from the same checkpoint
+    // second file arrives; restart from the same checkpoint. With it comes
+    // a file whose mtime is 8 days older than d1's: a late arrival is still
+    // read (no file-age eviction; Spark's default maxFileAge is 7 days)
     writeDoc("d2.rdf", "bob")
+    writeDoc("d0.rdf", "carol")
+    val d1Time = new java.io.File(input, "d1.rdf").lastModified()
+    assert(new java.io.File(input, "d0.rdf").setLastModified(d1Time - 8L * 24 * 3600 * 1000))
     runOnce()
     val streamed = spark.read.parquet(out)
-    // resume replays only the NEW file — d1 was committed in the first run
+    // resume replays only the NEW files — d1 was committed in the first run
     assert(streamed.filter(col("path").endsWith("d1.rdf")).count() == 2,
       "resume must not re-emit committed files")
-    assert(streamed.count() == 4)
+    assert(streamed.filter(col("path").endsWith("d0.rdf")).count() == 2,
+      "a late file with an old mtime must still be parsed")
+    assert(streamed.count() == 6)
 
     // the streamed total equals the batch read (same source, same schema)
-    val batch = spark.read.format("rdfxml").load(input)
+    val batch = graft.sources.RdfXmlFiles.read(spark, input)
     assert(streamed.exceptAll(batch).count() == 0 && batch.exceptAll(streamed).count() == 0)
   }
 
@@ -135,20 +142,17 @@ class StreamingSpec extends SparkSuite {
         |</rdf:RDF>""".stripMargin
       Files.write(java.nio.file.Paths.get(input, f"d$i%02d.rdf"), xml.getBytes("UTF-8"))
     }
-    val q = spark.readStream.format("rdfxml").option("maxFilesPerTrigger", 2).load(input)
+    val q = graft.sources.RdfXmlFiles.stream(spark, input, maxFilesPerTrigger = 2)
       .writeStream.format("memory").queryName("graft_rate")
       .option("checkpointLocation", s"$tmp/ckpt")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination(120000)
     // the whole backlog drains (AvailableNow keeps triggering until the
-    // offset stops advancing), but in ≥ 3 bounded log batches, not one
+    // offset stops advancing), but in ≥ 3 bounded batches, not one
     assert(spark.sql("select * from graft_rate").count() == 5)
-    // the source checkpoint is nested (ckpt/sources/<i>); find the file-log
-    val logDir = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$tmp/ckpt"))
-      .filter(p => p.getFileName.toString == "rdfxml-file-log").findFirst().get().toFile
-    val logEntries = logDir.listFiles().filter(f => f.getName.forall(_.isDigit))
-    assert(logEntries.length >= 3, logEntries.map(_.getName).mkString(","))
+    val batches = q.recentProgress.filter(_.numInputRows > 0)
+    assert(batches.length >= 3, batches.map(_.numInputRows).mkString(","))
   }
 
   test("rdfxml DSv2 streaming read: gzip documents decompress through the shared reader") {
@@ -162,7 +166,7 @@ class StreamingSpec extends SparkSuite {
     val out = new java.util.zip.GZIPOutputStream(
       java.nio.file.Files.newOutputStream(java.nio.file.Paths.get(input, "z.rdf.gz")))
     out.write(xml.getBytes("UTF-8")); out.close()
-    val q = spark.readStream.format("rdfxml").load(input)
+    val q = graft.sources.RdfXmlFiles.stream(spark, input)
       .writeStream.format("memory").queryName("graft_gz")
       .option("checkpointLocation", s"$tmp/ckpt")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -170,44 +174,6 @@ class StreamingSpec extends SparkSuite {
     q.awaitTermination(60000)
     val rows = spark.sql("select subj, pred, obj from graft_gz").collect()
     assert(rows.length == 1 && rows.head.getString(2) == "\"z\"")
-  }
-
-  test("rdfxml DSv2 streaming read: an input dir that does not exist yet is 'no files', not an error") {
-    val tmp = Files.createTempDirectory("graft_stream_nodir").toString
-    val input = s"$tmp/not_created_yet"
-    val q = spark.readStream.format("rdfxml").load(input)
-      .writeStream.format("memory").queryName("graft_nodir")
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(60000)
-    assert(spark.sql("select * from graft_nodir").count() == 0)
-  }
-
-  test("rdfxml DSv2 streaming: a logged file deleted before replay fails at PLAN time naming log entry + path") {
-    val tmp = Files.createTempDirectory("graft_stream_gone").toString
-    val input = s"$tmp/input"
-    new java.io.File(input).mkdirs()
-    val doc = """<?xml version="1.0"?>
-      |<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" xmlns:ex="http://example.org/">
-      |  <rdf:Description rdf:about="http://example.org/a"><ex:n>1</ex:n></rdf:Description>
-      |</rdf:RDF>""".stripMargin
-    Files.write(java.nio.file.Paths.get(input, "d1.rdf"), doc.getBytes("UTF-8"))
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      org.apache.spark.sql.GraftSqlBridge.hadoopConfWithOptions(spark, Map.empty))
-    val stream = new graft.sources.RdfXmlMicroBatchStream(
-      input, 32L * 1024 * 1024, Array.empty, conf, s"$tmp/ckpt", () => null)
-    import org.apache.spark.sql.connector.read.streaming.ReadLimit
-    val start = stream.initialOffset()
-    val end = stream.latestOffset(start, ReadLimit.allAvailable())
-    assert(new java.io.File(input, "d1.rdf").delete())
-    // Replay of the logged-but-vanished file must fail AT PLAN TIME with a
-    // message naming the file-log and the missing path — not as an opaque
-    // task-level FileNotFoundException (r3 ADVICE).
-    val e = intercept[java.io.FileNotFoundException](stream.planInputPartitions(start, end))
-    assert(e.getMessage.contains("d1.rdf"), e.getMessage)
-    assert(e.getMessage.contains("rdfxml-file-log"), e.getMessage)
-    assert(e.getMessage.contains("entry 0"), e.getMessage)
   }
 
   test("streaming resume: restart from checkpoint does not duplicate output") {

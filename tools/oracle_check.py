@@ -8,6 +8,7 @@ con = duckdb.connect()
 for t in ['region','nation','customer','supplier','part','orders','lineitem','events','documents','embeddings']:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
 
+ok = 0
 for name, sql in sorted(oracle.items()):
     try:
         exp = con.execute(sql).fetchdf()
@@ -25,6 +26,7 @@ for name, sql in sorted(oracle.items()):
     if len(exp) != len(act):
         print(f'{name}: ROWCOUNT exp={len(exp)} act={len(act)}'); continue
     if exp.equals(act):
+        ok += 1
         print(f'{name}: OK ({len(exp)} rows)')
     else:
         neq = (exp != act) & ~(exp.isna() & act.isna())
@@ -32,3 +34,7 @@ for name, sql in sorted(oracle.items()):
         print(f'{name}: VALUE MISMATCH {bad.sum()} rows differ of {len(exp)}')
         print('expected:'); print(exp[bad].head(3))
         print('actual:'); print(act[bad].head(3))
+
+# a gate: any query that is not OK fails the check
+print(f'{ok}/{len(oracle)} OK')
+sys.exit(0 if ok == len(oracle) else 1)
