@@ -296,13 +296,16 @@ object Similarity {
     * where the aggregate gives cell 0), every norm is non-zero (under ANSI
     * the kernel scores a zero divisor null where `Divide` raises), and
     * `vec_id` is unique (the aggregate collapses duplicates, the kernel
-    * does not). */
+    * does not). The cell is looked up with the 0-based `get`, not
+    * `element_at`: under ANSI, Spark types `element_at` over an array of
+    * non-null cells as non-nullable even when the index is null, so a null
+    * argmax came back as the last cell instead of NULL. */
   private[graft] def coarseAssign(e: DataFrame, codebook: DataFrame): DataFrame =
     e.crossJoin(broadcast(codebookRow(codebook)))
       .select(col("vec_id"), col("embedding"), col("n"),
-        element_at(col("cb_cells"),
+        get(col("cb_cells"),
           graft.functions.GraftFunctions.argmax_cos(
-            col("embedding"), col("n"), col("cb_cents"), col("cb_cnorms")) + 1).as("cell"))
+            col("embedding"), col("n"), col("cb_cents"), col("cb_cnorms"))).as("cell"))
 
   /** The defining aggregate formulation of [[coarseAssign]] (the shape the
     * DuckDB oracles replay): kept ONLY as the equivalence oracle for the

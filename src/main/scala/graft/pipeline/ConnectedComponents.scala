@@ -51,7 +51,11 @@ object ConnectedComponents {
     *        distributed path is the default above it and at cluster scale;
     *        both produce identical labels (ConnectedComponentsSpec pins it).
     * @return (node, component) for every node incident to an edge;
-    *         component = lexicographic min node id of the component.
+    *         component = lexicographic min node id of the component. That
+    *         least node has its own row, labeled by itself, so
+    *         `count_if(node = component)` is the number of components —
+    *         the figure the KG job records for its `entities` (both paths
+    *         keep this; ConnectedComponentsSpec pins it).
     * @throws IllegalStateException if the fixpoint is not reached within
     *         maxIter — silently wrong canonical labels are worse than a
     *         failed job at any scale.

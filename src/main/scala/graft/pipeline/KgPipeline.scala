@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Materialize.Figures
 
 /** The end-to-end KG-construction job (north_star): transcripts → windowed
   * conversation reconstruction → per-turn RDF/XML parse + NER → entity
@@ -18,60 +19,75 @@ object KgPipeline {
     * (and re-broadcast at runtime if the map turns out small after all). */
   val CanonicalBroadcastMaxRows = 10000000L
 
-  /** The mention → component join with the size guard applied. The row
-    * count is read from the already-materialized canonical snapshot, so the
-    * guard costs one metadata-cheap count, not an extra shuffle. */
+  /** The mention → component join with the size guard applied.
+    * `canonicalRows` is the canonical stage's recorded row count, so the
+    * guard costs no job. */
   private[pipeline] def joinCanonical(mentions: DataFrame, canonical: DataFrame,
-                                      maxBroadcastRows: Long): DataFrame = {
-    val dim = if (canonical.count() <= maxBroadcastRows) broadcast(canonical) else canonical
+                                      canonicalRows: Long, maxBroadcastRows: Long): DataFrame = {
+    val dim = if (canonicalRows <= maxBroadcastRows) broadcast(canonical) else canonical
     mentions.join(dim, mentions("mention") === canonical("node"))
   }
 
+  /** What one run built, read from the stage manifests on fresh and resumed
+    * runs alike — no field is recounted:
+    *  - `turns`: payload turns the parse stage read + prose turns the
+    *    mentions stage read (observed on each stage's input);
+    *  - `triples`: rows of `triples_all`;
+    *  - `parseErrors`: error rows of the parse stage;
+    *  - `mentions`: rows of the mentions stage;
+    *  - `entities`: canonical rows with `node = component` (one per
+    *    component: see [[ConnectedComponents.run]]);
+    *  - `subjectsApprox`: HLL sketch (`approx_count_distinct`, rsd 0.02) of
+    *    the distinct subjects of `triples_all` — the affordable cardinality
+    *    read at 10¹²-row scale, where an exact countDistinct would be its
+    *    own full-shuffle job (SURVEY P10);
+    *  - `reusedStages`: stages of the six whose manifest was reused. */
   final case class PipelineStats(
       turns: Long,
       triples: Long,
       parseErrors: Long,
       mentions: Long,
       entities: Long,
-      // HLL sketch of distinct subjects — the affordable cardinality read at
-      // 10¹²-row scale, where an exact countDistinct would be its own
-      // full-shuffle job (SURVEY P10).
       subjectsApprox: Long,
       reusedStages: Int,
   )
 
+  /** Run the job into `outDir`, resuming from every stage whose manifest is
+    * present: a fully reused run reads only the manifests and launches no
+    * Spark job. */
   def run(spark: SparkSession, sfDir: String, outDir: String,
           canonicalBroadcastMaxRows: Long = CanonicalBroadcastMaxRows): PipelineStats = {
-    var reused = 0
-
-    // P1-P3: scan + parse (shuffle-free; each turn self-contained).
-    val turns = Transcripts.transcripts(spark, sfDir)
-    val (parsed, r1) = Materialize.snapshotStage(spark, "parse", s"$outDir/parse") {
-      ParseStage.parseTurns(turns.filter(col("turn_idx") % 2 === 0))
+    // P1-P3: scan + parse of the payload turns (shuffle-free; each turn
+    // self-contained).
+    val payloadTurns = new Figures("payload_turns" -> count(lit(1)))
+    val (parsed, parse) = Materialize.snapshotStage(spark, "parse", s"$outDir/parse",
+        Seq("error_rows" -> count(col("error"))), Seq(payloadTurns)) {
+      ParseStage.parseTurns(payloadTurns(Transcripts.payloadTurns(spark, sfDir)))
     }
-    if (r1.reused) reused += 1
 
     // P5: mentions from the prose turns.
-    val (mentions, r2) = Materialize.snapshotStage(spark, "mentions", s"$outDir/mentions") {
-      Ner.mentions(turns.filter(col("turn_idx") % 2 === 1))
+    val proseTurns = new Figures("prose_turns" -> count(lit(1)))
+    val (mentions, ment) = Materialize.snapshotStage(spark, "mentions", s"$outDir/mentions",
+        inputs = Seq(proseTurns)) {
+      Ner.mentions(proseTurns(Transcripts.proseTurns(spark, sfDir)))
     }
-    if (r2.reused) reused += 1
 
     // P6-P8: universe → LSH candidates → verified edges → components.
-    val (canonical, r3) = Materialize.snapshotStage(spark, "canonical", s"$outDir/canonical") {
+    val (canonical, canon) = Materialize.snapshotStage(spark, "canonical", s"$outDir/canonical",
+        Seq("components" -> count_if(col("node") === col("component")))) {
       val universe = mentions.select("mention").distinct()
       val edges = Linking.jaccardEdges(universe, 0.5)
       ConnectedComponents.run(edges)
     }
-    if (r3.reused) reused += 1
 
     // Canonical entity triples: mention → its component representative,
     // emitted as sameAs triples joined into the graph. The canonical map is
     // usually small (distinct mentions) → broadcast join; size-guarded so a
     // corpus whose mention universe outgrows broadcast limits degrades to a
     // shuffle join instead of failing (see [[CanonicalBroadcastMaxRows]]).
-    val (allTriples, r4) = Materialize.snapshotStage(spark, "triples_all", s"$outDir/triples_all") {
-      val mentionTriples = joinCanonical(mentions, canonical, canonicalBroadcastMaxRows)
+    val (allTriples, all) = Materialize.snapshotStage(spark, "triples_all", s"$outDir/triples_all",
+        Seq("subjects_approx" -> approx_count_distinct(col("subj"), 0.02))) {
+      val mentionTriples = joinCanonical(mentions, canonical, canon.rows, canonicalBroadcastMaxRows)
         .select(
           concat(lit("<http://graft.dev/mention/"), col("mention"), lit(">")).as("subj"),
           lit("<http://graft.dev/voc#sameAs>").as("pred"),
@@ -81,24 +97,21 @@ object KgPipeline {
         .select("subj", "pred", "obj", "conv_id", "turn_idx")
         .unionAll(mentionTriples)
     }
-    if (r4.reused) reused += 1
 
     // P9: bucketed, pred-partitioned triple table + subject adjacency table.
-    val matRes = Materialize.triples(
+    val graph = Materialize.triples(
       allTriples.withColumn("error", lit(null: String)), s"$outDir/graph")
-    if (matRes.reused) reused += 1
-    val adjRes = Materialize.adjacency(
+    val adjacency = Materialize.adjacency(
       allTriples.withColumn("error", lit(null: String)), s"$outDir/adjacency")
-    if (adjRes.reused) reused += 1
 
     PipelineStats(
-      turns = turns.count(),
-      triples = allTriples.count(),
-      parseErrors = parsed.filter(col("error").isNotNull).count(),
-      mentions = mentions.count(),
-      entities = canonical.select("component").distinct().count(),
-      subjectsApprox = allTriples.agg(approx_count_distinct("subj", 0.02)).head().getLong(0),
-      reusedStages = reused,
+      turns = parse.figures("payload_turns") + ment.figures("prose_turns"),
+      triples = all.rows,
+      parseErrors = parse.figures("error_rows"),
+      mentions = ment.rows,
+      entities = canon.figures("components"),
+      subjectsApprox = all.figures("subjects_approx"),
+      reusedStages = Seq(parse, ment, canon, all, graph, adjacency).count(_.reused),
     )
   }
 }

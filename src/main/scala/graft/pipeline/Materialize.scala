@@ -1,18 +1,35 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.util.Try
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
 
 /** P9/P10: graph materialization and resumable snapshot stages.
   *
   * Layout is Iceberg-shaped without an Iceberg catalog (none in the image —
   * SURVEY §7): each stage writes a parquet snapshot directory plus a
-  * `_meta/manifest.json` carrying row counts, per-partition metrics and the
-  * stage name; a stage whose manifest already exists is *not* recomputed —
-  * it re-reads its snapshot, which is what makes every stage re-entrant
-  * (north_rule: "resumable from checkpoint with per-partition lineage +
-  * metrics"). Swap the writer for a real Iceberg catalog at deploy time.
+  * `_meta/manifest.json` carrying the stage name, its row count and named
+  * figures, per-partition row counts and (for snapshot stages) the schema;
+  * a stage whose manifest is already present is *not* recomputed — it
+  * re-opens its snapshot with the stored schema, which is what makes every
+  * stage re-entrant (north_rule: "resumable from checkpoint with
+  * per-partition lineage + metrics"). Swap the writer for a real Iceberg
+  * catalog at deploy time.
+  *
+  * Every figure is recorded while the stage writes, never by a job of its
+  * own: the row count and named figures are observed (`Dataset.observe`)
+  * on the written frame or on an input that no exchange separates from the
+  * write, so they are counted in the write's result stage, where Spark
+  * applies each task's accumulator update exactly once; the per-partition
+  * rows come from the written files' parquet footers, read on the driver.
+  * A resume reads only manifests.
   *
   * Triple layout for scale: partitioned by `pred_bucket` (16-way — predicate
   * sets are small and skewed, bucketing by hash keeps partition counts
@@ -22,31 +39,133 @@ import org.apache.spark.sql.functions._
   */
 object Materialize {
 
-  final case class StageResult(path: String, rows: Long, reused: Boolean)
+  /** What a stage wrote. `rows` and the named `figures` were observed while
+    * the stage wrote its snapshot (see [[snapshotStage]]); on reuse both
+    * come from the stage's manifest, so a resumed stage recounts nothing. */
+  final case class StageResult(path: String, rows: Long, reused: Boolean,
+                               figures: Map[String, Long] = Map.empty)
+
+  /** Named aggregate figures observed on a frame while a stage writes it.
+    * Apply it to the frame (`figures(df)`) inside the stage's `compute`, on
+    * the written frame or on an input that no exchange separates from the
+    * write, and pass it to [[snapshotStage]] as an input: the figures then
+    * ride the write's own job. One use per instance (an `Observation`). */
+  final class Figures(figures: (String, Column)*) {
+    private val observation = Observation()
+    val names: Seq[String] = figures.map(_._1)
+    def apply(df: DataFrame): DataFrame = {
+      val cols = figures.map { case (n, c) => c.as(n) }
+      df.observe(observation, cols.head, cols.tail: _*)
+    }
+    private[Materialize] def values: Map[String, Long] =
+      observation.get.map { case (k, v) => k -> v.asInstanceOf[Number].longValue }
+  }
 
   private def manifestPath(dir: String) = Paths.get(dir, "_meta", "manifest.json")
 
-  def manifestExists(dir: String): Boolean = Files.exists(manifestPath(dir))
+  private final case class Manifest(rows: Long, figures: Map[String, Long], schema: Option[StructType])
 
-  /** Run `compute` as a resumable snapshot stage: skip + re-read when the
-    * snapshot manifest is already present. */
-  def snapshotStage(spark: SparkSession, name: String, dir: String)(compute: => DataFrame): (DataFrame, StageResult) = {
-    if (manifestExists(dir)) {
-      val df = spark.read.parquet(s"$dir/data")
-      (df, StageResult(dir, -1L, reused = true))
-    } else {
-      val df = compute
-      df.write.mode("overwrite").parquet(s"$dir/data")
-      val back = spark.read.parquet(s"$dir/data")
-      val partCounts = back.groupBy(spark_partition_id().as("pid")).count()
-        .collect().map(r => (r.getInt(0), r.getLong(1)))
-      val rows = partCounts.map(_._2).sum
-      val partitions = partCounts.map { case (pid, n) => s"""{"pid":$pid,"rows":$n}""" }
-      Files.createDirectories(manifestPath(dir).getParent)
-      Files.writeString(manifestPath(dir),
-        s"""{"stage":"$name","rows":$rows,"partitions":[${partitions.mkString(",")}]}""")
-      (back, StageResult(dir, rows, reused = false))
+  /** The stage's manifest, or None when it is missing, does not parse, or
+    * lacks one of the `needed` figures (or the schema, when `needSchema`) —
+    * e.g. one an older writer left: the stage then recomputes. */
+  private def readManifest(dir: String, needed: Seq[String], needSchema: Boolean): Option[Manifest] =
+    Try {
+      val json = parse(Files.readString(manifestPath(dir)))
+      val JInt(rows) = json \ "rows"
+      val figures = json \ "figures" match {
+        case JObject(fs) => fs.collect { case (k, JInt(v)) => k -> v.toLong }.toMap
+        case _ => Map.empty[String, Long]
+      }
+      val schema = Option(json \ "schema").filter(_ != JNothing)
+        .map(s => DataType.fromJson(compact(render(s))).asInstanceOf[StructType])
+      Manifest(rows.toLong, figures, schema)
+    }.toOption.filter(m => needed.forall(m.figures.contains) && (!needSchema || m.schema.isDefined))
+
+  /** Commit a stage: write its manifest to a temporary file and move it
+    * into place atomically, so a reader never sees half a manifest. */
+  private def writeManifest(dir: String, fields: JField*): Unit = {
+    val target = manifestPath(dir)
+    Files.createDirectories(target.getParent)
+    val tmp = target.resolveSibling("manifest.json.tmp")
+    Files.writeString(tmp, compact(render(JObject(fields: _*))))
+    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** Run `write` on `df` with `rows` plus `figures` observed on it, and
+    * return them with every input's figures. */
+  private def observedWrite(df: DataFrame, figures: Seq[(String, Column)] = Nil, inputs: Seq[Figures] = Nil)
+                           (write: DataFrame => Unit): Map[String, Long] = {
+    val out = new Figures(("rows" -> count(lit(1))) +: figures: _*)
+    write(out(df))
+    (out +: inputs).map(_.values).reduce(_ ++ _)
+  }
+
+  private val PartFile = """^part-(\d+)-.*\.parquet$""".r
+
+  /** Rows of every part file under `data` from its parquet footer (read on
+    * the driver, no job), as (partition directory relative to `data`, part
+    * number, rows) sorted. Keyed by the writing task's part number, never by
+    * the file's per-write UUID name, so two runs over the same input give
+    * the same manifest bytes. Fails when the footers do not hold exactly
+    * the `rows` the write observed. */
+  private def fileRows(spark: SparkSession, data: String, rows: Long): Seq[(String, Int, Long)] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(data)
+    val fs = root.getFileSystem(conf)
+    val rootPath = fs.makeQualified(root).toUri.getPath
+    val files = fs.listFiles(root, true)
+    val out = Seq.newBuilder[(String, Int, Long)]
+    while (files.hasNext) {
+      val st = files.next()
+      PartFile.findFirstMatchIn(st.getPath.getName).foreach { m =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try out += ((st.getPath.getParent.toUri.getPath.stripPrefix(rootPath).stripPrefix("/"),
+          m.group(1).toInt, reader.getRecordCount))
+        finally reader.close()
+      }
     }
+    val result = out.result().sorted
+    require(result.map(_._3).sum == rows,
+      s"the parquet footers under $data hold ${result.map(_._3).sum} rows, the write observed $rows")
+    result
+  }
+
+  private def partEntries(files: Seq[(String, Int, Long)]): JArray =
+    JArray(files.map { case (_, part, n) => JObject("part" -> JInt(part), "rows" -> JInt(n)) }.toList)
+
+  /** Run `compute` as a resumable snapshot stage.
+    *
+    * Fresh: `compute`'s frame is written to `dir/data` with its row count
+    * and `figures` (name → aggregate over the written rows) observed on it;
+    * each of `inputs` must be applied inside `compute` to a frame that no
+    * exchange separates from the write. The manifest then records `rows`,
+    * the figures, per-part rows from the written footers and the schema.
+    *
+    * Reused — the manifest is present, parses, and holds every figure named
+    * by `figures` and `inputs`: `compute` does not run, and the figures are
+    * the manifest's. Both paths open the snapshot with the manifest's
+    * schema, so neither infers one. */
+  def snapshotStage(spark: SparkSession, name: String, dir: String,
+                    figures: Seq[(String, Column)] = Nil, inputs: Seq[Figures] = Nil)
+                   (compute: => DataFrame): (DataFrame, StageResult) = {
+    val data = s"$dir/data"
+    val (m, reused) =
+      readManifest(dir, figures.map(_._1) ++ inputs.flatMap(_.names), needSchema = true) match {
+        case Some(m) => (m, true)
+        case None =>
+          val df = compute
+          val observed = observedWrite(df, figures, inputs)(_.write.mode("overwrite").parquet(data))
+          val rows = observed("rows")
+          val extra = observed - "rows"
+          writeManifest(dir,
+            "stage" -> JString(name),
+            "rows" -> JInt(rows),
+            "figures" -> JObject(extra.toList.sorted.map { case (k, v) => k -> JInt(v) }),
+            "partitions" -> partEntries(fileRows(spark, data, rows)),
+            "schema" -> parse(df.schema.json))
+          (Manifest(rows, extra, Some(df.schema)), false)
+      }
+    (spark.read.schema(m.schema.get).parquet(data), StageResult(dir, m.rows, reused, m.figures))
   }
 
   /** Materialize the adjacency table: one row per subject with the full
@@ -57,8 +176,8 @@ object Materialize {
     * which is bucketed for exactly that. Degree stays exact (count, not
     * list size). */
   def adjacency(rows: DataFrame, dir: String, maxFanout: Int = 1024, subjBuckets: Int = 64): StageResult = {
-    val spark = rows.sparkSession
-    if (manifestExists(dir)) return StageResult(dir, -1L, reused = true)
+    val prior = readManifest(dir, Nil, needSchema = false)
+    if (prior.isDefined) return StageResult(dir, prior.get.rows, reused = true)
     val triples = rows.filter(col("error").isNull)
     // Degree/n_pred: plain aggregates — map-side partial, skew-safe.
     val degrees = triples.groupBy("subj")
@@ -76,15 +195,16 @@ object Materialize {
       .agg(sort_array(collect_list(struct(col("pred"), col("obj")))).as("edges"))
     val adj = degrees.join(capped, "subj")
       .withColumn("subj_hash", pmod(xxhash64(col("subj")), lit(subjBuckets)).cast("int"))
-    adj.repartition(col("subj_hash"))
-      .sortWithinPartitions("subj")
-      .write.mode("overwrite").parquet(s"$dir/data")
-    val back = spark.read.parquet(s"$dir/data")
-    val rows2 = back.count()
-    Files.createDirectories(manifestPath(dir).getParent)
-    Files.writeString(manifestPath(dir),
-      s"""{"stage":"adjacency","rows":$rows2,"maxFanout":$maxFanout,"buckets":$subjBuckets}""")
-    StageResult(dir, rows2, reused = false)
+    val data = s"$dir/data"
+    val written = observedWrite(adj.repartition(col("subj_hash")).sortWithinPartitions("subj"))(
+      _.write.mode("overwrite").parquet(data))("rows")
+    writeManifest(dir,
+      "stage" -> JString("adjacency"),
+      "rows" -> JInt(written),
+      "maxFanout" -> JInt(maxFanout),
+      "buckets" -> JInt(subjBuckets),
+      "partitions" -> partEntries(fileRows(rows.sparkSession, data, written)))
+    StageResult(dir, written, reused = false)
   }
 
   /** Catalog-bucketed triple table (`bucketBy` + `saveAsTable`): subject-hash
@@ -175,26 +295,24 @@ object Materialize {
   /** Materialize the triple table: pred_bucket partitions on disk, rows
     * co-located and sorted by subject within files. */
   def triples(rows: DataFrame, dir: String, subjBuckets: Int = 64): StageResult = {
-    val spark = rows.sparkSession
-    if (manifestExists(dir)) return StageResult(dir, -1L, reused = true)
+    val prior = readManifest(dir, Nil, needSchema = false)
+    if (prior.isDefined) return StageResult(dir, prior.get.rows, reused = true)
     val keyed = rows
       .filter(col("error").isNull)
       .withColumn("pred_bucket", pmod(xxhash64(col("pred")), lit(16)).cast("int"))
       .withColumn("subj_hash", pmod(xxhash64(col("subj")), lit(subjBuckets)).cast("int"))
-    keyed
-      .repartition(col("subj_hash"))
-      .sortWithinPartitions("subj", "pred")
-      .write.mode("overwrite")
-      .partitionBy("pred_bucket")
-      .parquet(s"$dir/data")
-    val back = spark.read.parquet(s"$dir/data")
-    val perBucket = back.groupBy("pred_bucket").count().collect()
-      .map(r => s"""{"pred_bucket":${r.get(0)},"rows":${r.getLong(1)}}""")
-    val rows2 = back.count()
-    Files.createDirectories(manifestPath(dir).getParent)
-    Files.writeString(manifestPath(dir),
-      s"""{"stage":"triples","rows":$rows2,"buckets":$subjBuckets,"partitions":[${perBucket.mkString(",")}]}""")
-    StageResult(dir, rows2, reused = false)
+    val data = s"$dir/data"
+    val written = observedWrite(keyed.repartition(col("subj_hash")).sortWithinPartitions("subj", "pred"))(
+      _.write.mode("overwrite").partitionBy("pred_bucket").parquet(data))("rows")
+    val perBucket = fileRows(rows.sparkSession, data, written)
+      .groupMapReduce(_._1)(_._3)(_ + _).toList
+      .map { case (d, n) => (d.stripPrefix("pred_bucket=").toInt, n) }.sorted
+    writeManifest(dir,
+      "stage" -> JString("triples"),
+      "rows" -> JInt(written),
+      "buckets" -> JInt(subjBuckets),
+      "partitions" -> JArray(perBucket.map { case (b, n) => JObject("pred_bucket" -> JInt(b), "rows" -> JInt(n)) }))
+    StageResult(dir, written, reused = false)
   }
 }
 

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import org.apache.spark.sql.functions.{col, count_if}
+
 class ConnectedComponentsSpec extends SparkSuite {
 
   /** Single-JVM oracle: union-find. */
@@ -35,11 +37,16 @@ class ConnectedComponentsSpec extends SparkSuite {
     (1 to 5).foreach { trial =>
       val es = List.fill(60)((f"n${rnd.nextInt(40)}%02d", f"n${rnd.nextInt(40)}%02d"))
       val real = es.filter { case (a, b) => a != b }
-      val driver = ConnectedComponents.run(real.toDF("a", "b")).as[(String, String)].collect().toMap
-      val dist = ConnectedComponents.run(real.toDF("a", "b"), driverEdgeLimit = 0)
-        .as[(String, String)].collect().toMap
+      val driverDf = ConnectedComponents.run(real.toDF("a", "b"))
+      val distDf = ConnectedComponents.run(real.toDF("a", "b"), driverEdgeLimit = 0)
+      val driver = driverDf.as[(String, String)].collect().toMap
+      val dist = distDf.as[(String, String)].collect().toMap
       assert(driver == oracle(real), s"trial $trial (driver fast path)")
       assert(dist == oracle(real), s"trial $trial (distributed path)")
+      // each component's least node labels itself: the KG job's entity figure
+      for ((df, path) <- Seq(driverDf -> "driver fast path", distDf -> "distributed path"))
+        assert(df.agg(count_if(col("node") === col("component"))).head().getLong(0) ==
+          df.select("component").distinct().count(), s"trial $trial ($path): component count")
     }
   }
 

@@ -59,22 +59,42 @@ class PipelineSpec extends SparkSuite {
     val dir = Files.createTempDirectory("graft_snap").toString
     var computes = 0
     def compute = { computes += 1; Seq((1, "a"), (2, "b")).toDF("id", "v") }
-    val (df1, r1) = Materialize.snapshotStage(spark, "s", dir)(compute)
+    def figures = Seq("b_rows" -> count_if(col("v") === "b"))
+    def stage(d: String) = {
+      val odd = new Materialize.Figures("odd_in" -> count_if(col("id") % 2 === 1))
+      Materialize.snapshotStage(spark, "s", d, figures, Seq(odd))(odd(compute))
+    }
+    val (df1, r1) = stage(dir)
     assert(!r1.reused && r1.rows == 2 && computes == 1)
-    val (df2, r2) = Materialize.snapshotStage(spark, "s", dir)(compute)
-    assert(r2.reused && computes == 1)
+    assert(r1.figures == Map("b_rows" -> 1L, "odd_in" -> 1L))
+    // reuse: rows and figures come back from the manifest, nothing recounted
+    val (df2, r2) = stage(dir)
+    assert(r2.reused && r2.rows == 2 && r2.figures == r1.figures && computes == 1)
     assert(df2.collect().map(_.getInt(0)).sorted sameElements Array(1, 2))
-    val manifest = Files.readString(java.nio.file.Paths.get(dir, "_meta", "manifest.json"))
+    val manifestPath = java.nio.file.Paths.get(dir, "_meta", "manifest.json")
+    val manifest = Files.readString(manifestPath)
     assert(manifest.contains("\"rows\":2"))
     // an interrupted write: data/ landed but _meta/manifest.json did not —
     // the rerun recomputes and ends exactly where an uninterrupted run does
     val torn = Files.createTempDirectory("graft_snap_torn").toString
     Seq((9, "partial")).toDF("id", "v").write.parquet(s"$torn/data")
-    val (df3, r3) = Materialize.snapshotStage(spark, "s", torn)(compute)
+    val (df3, r3) = stage(torn)
     assert(!r3.reused && r3.rows == 2 && computes == 2)
     def sorted(df: org.apache.spark.sql.DataFrame) = df.as[(Int, String)].collect().sorted.toSeq
     assert(sorted(df3) == sorted(df1))
     assert(Files.readString(java.nio.file.Paths.get(torn, "_meta", "manifest.json")) == manifest)
+    // a truncated manifest, one without the figures (as an older writer
+    // left it), and a stage that needs a figure the manifest lacks all
+    // count as absent: the stage recomputes and rewrites the same manifest
+    Files.writeString(manifestPath, manifest.take(manifest.length / 2))
+    assert(!stage(dir)._2.reused && computes == 3)
+    assert(Files.readString(manifestPath) == manifest)
+    Files.writeString(manifestPath, """{"stage":"s","rows":2,"partitions":[{"pid":0,"rows":2}]}""")
+    assert(!stage(dir)._2.reused && computes == 4)
+    assert(Files.readString(manifestPath) == manifest)
+    val (_, r5) = Materialize.snapshotStage(spark, "s", dir,
+      figures :+ ("a_rows" -> count_if(col("v") === "a")))(compute)
+    assert(!r5.reused && r5.figures == Map("a_rows" -> 1L, "b_rows" -> 1L) && computes == 5)
   }
 
   test("KgPipeline end-to-end + resume") {
@@ -90,13 +110,33 @@ class PipelineSpec extends SparkSuite {
     assert(stats.mentions == 1000 + Transcripts.HubMentions)
     assert(stats.entities > 0 && stats.entities < 70)
     assert(stats.reusedStages == 0)
+    // the recorded figures equal a recount of the written snapshots
+    def snap(stage: String) = spark.read.parquet(s"$out/$stage/data")
+    assert(stats.triples == snap("triples_all").count())
+    assert(stats.parseErrors == snap("parse").filter(col("error").isNotNull).count())
+    assert(stats.mentions == snap("mentions").count())
+    assert(stats.entities == snap("canonical").select("component").distinct().count())
     // HLL at rsd=0.02 must land within ~3x rsd of the exact distinct count
-    val exactSubjects = spark.read.parquet(s"$out/triples_all/data").select("subj").distinct().count()
+    val exactSubjects = snap("triples_all").select("subj").distinct().count()
     assert(math.abs(stats.subjectsApprox - exactSubjects).toDouble / exactSubjects < 0.06,
       s"approx=${stats.subjectsApprox} exact=$exactSubjects")
-    val stats2 = KgPipeline.run(spark, sfDir, out)
-    assert(stats2.reusedStages == 6)
-    assert(stats2.triples == stats.triples)
+    // a fully reused run reads only the manifests: the same stats, and not
+    // one Spark job in its job group
+    val sc = spark.sparkContext
+    val group = s"kg-resume-${System.nanoTime()}"
+    sc.setJobGroup(group, "resumed KgPipeline.run")
+    val stats2 = try KgPipeline.run(spark, sfDir, out) finally sc.clearJobGroup()
+    assert(stats2 == stats.copy(reusedStages = 6))
+    // the status tracker learns of jobs through the listener bus, in order:
+    // once a job started after the run is visible, any job of the run is too
+    val probe = s"$group-probe"
+    sc.setJobGroup(probe, "listener-bus probe")
+    try spark.range(1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30e9.toLong
+    while (sc.statusTracker.getJobIdsForGroup(probe).isEmpty && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup(probe).nonEmpty)
+    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty)
     // materialized layout: pred_bucket partition dirs exist
     val graphDirs = new java.io.File(s"$out/graph/data").listFiles().map(_.getName).filter(_.startsWith("pred_bucket="))
     assert(graphDirs.nonEmpty)
@@ -156,8 +196,8 @@ class PipelineSpec extends SparkSuite {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val small = KgPipeline.joinCanonical(mentions, canonical, maxBroadcastRows = 1000000)
-      val large = KgPipeline.joinCanonical(mentions, canonical, maxBroadcastRows = 0)
+      val small = KgPipeline.joinCanonical(mentions, canonical, canonicalRows = 3, maxBroadcastRows = 1000000)
+      val large = KgPipeline.joinCanonical(mentions, canonical, canonicalRows = 3, maxBroadcastRows = 0)
       assert(small.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
       val largePlan = large.queryExecution.executedPlan.toString
       assert(!largePlan.contains("BroadcastHashJoin"), largePlan) // sort-merge/shuffled-hash fallback

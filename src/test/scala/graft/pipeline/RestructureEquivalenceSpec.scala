@@ -53,6 +53,17 @@ class RestructureEquivalenceSpec extends SparkSuite {
     assert(rows(Similarity.coarseAssign(e, cb0)) == rows(Similarity.coarseAssignByAgg(e, cb0)))
     val cbT = Similarity.lloydRefine(e, cb0, 2)
     assert(rows(Similarity.coarseAssign(e, cbT)) == rows(Similarity.coarseAssignByAgg(e, cbT)))
+    // outside the documented precondition (non-null embedding and norm) the
+    // two diverge: the kernel gives a NULL cell, the aggregate cell 0
+    val nulls = e.filter(col("vec_id") === 0).select(lit(-1L).as("vec_id"),
+        lit(null).cast(e.schema("embedding").dataType).as("embedding"), lit(null).cast("double").as("n"))
+      .unionAll(e.filter(col("vec_id") === 1).select(lit(-2L).as("vec_id"), col("embedding"),
+        lit(null).cast("double").as("n")))
+    val withNulls = e.unionAll(nulls)
+    def cells(df: DataFrame) = df.filter(col("vec_id") < 0).select("vec_id", "cell").collect()
+      .map(r => r.getLong(0) -> Option(r.get(1))).toMap
+    assert(cells(Similarity.coarseAssign(withNulls, cb0)) == Map(-1L -> None, -2L -> None))
+    assert(cells(Similarity.coarseAssignByAgg(withNulls, cb0)) == Map(-1L -> Some(0), -2L -> Some(0)))
   }
 
   test("map-side pqCodes equals the defining groupBy argmin — untrained and trained") {
